@@ -37,11 +37,35 @@ object Bfs {
   /** (node, dist) for every node within `maxHops` of a seed; seeds come
     * back at dist 0 (even seeds absent from the edge table). Follows
     * edges src→dst as given; set `undirected` to mirror them first.
-    * Seeds are deduplicated.
+    * Seeds are deduplicated. Runs [[frontierBfs]] with no label key.
     */
   def hopDistance(edges: DataFrame, srcCol: String, dstCol: String,
                   seeds: DataFrame, seedCol: String,
-                  maxHops: Int, undirected: Boolean = false): DataFrame = {
+                  maxHops: Int, undirected: Boolean = false): DataFrame =
+    frontierBfs(edges, srcCol, dstCol, seeds, seedCol, maxHops, undirected, Nil)
+
+  /** PER-SEED BFS distances — (seed, node, dist) for every seed and
+    * every node within `maxHops` of it: [[frontierBfs]] with the seed
+    * label riding in the frontier key, so different seeds' waves
+    * expand independently in ONE fixpoint (state and shuffle are
+    * Σ per-seed reachability — size the seed SAMPLE accordingly; this
+    * is the bounded-radius, sampled-seed regime, not all-pairs).
+    */
+  def hopDistanceLabeled(edges: DataFrame, srcCol: String, dstCol: String,
+                         seeds: DataFrame, seedCol: String,
+                         maxHops: Int, undirected: Boolean = false): DataFrame =
+    frontierBfs(edges, srcCol, dstCol, seeds, seedCol, maxHops, undirected,
+      Seq("seed"))
+
+  /** The one level-synchronous BFS loop (see the object doc). `keys` are
+    * the label columns that ride in every frontier/settled row next to
+    * `node`: empty for plain hop distance, `seed` for per-seed waves —
+    * then rows are (seed, node) pairs, so the broadcast gate bounds
+    * Σ per-seed reachability, not node count.
+    */
+  private def frontierBfs(edges: DataFrame, srcCol: String, dstCol: String,
+                          seeds: DataFrame, seedCol: String, maxHops: Int,
+                          undirected: Boolean, keys: Seq[String]): DataFrame = {
     require(maxHops >= 0, "maxHops must be >= 0")
     val e0 = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
       .filter(col("u") =!= col("v"))
@@ -50,13 +74,16 @@ object Bfs {
       .distinct().persist(StorageLevel.MEMORY_AND_DISK)
     try {
       // a null seed is not a node: drop it rather than emit (null, 0)
+      val label = keys.headOption.getOrElse("node")
+      val start = seeds.select(col(seedCol).as(label))
+        .where(col(label).isNotNull).distinct()
       // LoopFrames.checkpoint, not plain localCheckpoint: settled and
       // layer get UNIONED each hop, and preserved origin constraints on
       // checkpointed frames can crash Union.rewriteConstraints
       val seed0 = graft.LoopFrames.checkpoint(
-        seeds.select(col(seedCol).as("node"))
-          .where(col("node").isNotNull).distinct()
+        (if (keys.isEmpty) start else start.withColumn("node", col(label)))
           .withColumn("dist", lit(0)))
+      val pair = (keys :+ "node").map(col)
       // settled accumulates as a LAZY UNION of the per-hop materialized
       // layers (r20): re-materializing the whole settled set every hop was
       // an O(settled) copy per round for rows that never change. Counted
@@ -69,92 +96,28 @@ object Bfs {
       // undirected two-layer invariant (r21, ADVICE r20): across an
       // undirected edge |dist(u) - dist(w)| <= 1, so a neighbor of the
       // hop-(h-1) frontier that is already settled can only live in
-      // layers h-1 or h-2. The anti-join side is then TWO materialized
-      // layers instead of the whole settled union — per-hop broadcast
-      // build and plan size stay constant as hops grow. Directed graphs
-      // lack the invariant (a far-forward edge can point at an early
-      // layer) and keep the full settled side.
+      // layers h-1 or h-2 (per seed wave, when labeled). The anti-join
+      // side is then TWO materialized layers instead of the whole settled
+      // union — per-hop broadcast build and plan size stay constant as
+      // hops grow. Directed graphs lack the invariant (a far-forward edge
+      // can point at an early layer) and keep the full settled side.
       var prevLayer = frontier
       var prevCount = frontierCount
       var hop = 0
       while (hop < maxHops && frontierCount > 0) {
         hop += 1
         val fr = graft.LoopFrames.maybeBroadcast(
-          frontier.select(col("node").as("u")), frontierCount)
+          frontier.select(keys.map(col) :+ col("node").as("u"): _*), frontierCount)
         val (anti, antiCount) =
           if (undirected && hop > 1)
-            (frontier.select(col("node"))
-               .unionByName(prevLayer.select(col("node"))),
+            (frontier.select(pair: _*).unionByName(prevLayer.select(pair: _*)),
              frontierCount + prevCount)
-          else (settled.select(col("node")), settledCount)
+          else (settled.select(pair: _*), settledCount)
         val st = graft.LoopFrames.maybeBroadcast(anti, antiCount)
         val layer = graft.LoopFrames.checkpoint(
           e.join(fr, "u")
-            .select(col("v").as("node")).distinct()
-            .join(st, Seq("node"), "left_anti")
-            .withColumn("dist", lit(hop)))
-        val layerCount = layer.count()
-        if (layerCount == 0L) graft.LoopFrames.release(layer)
-        else settled = settled.unionByName(layer)
-        settledCount += layerCount
-        prevLayer = frontier
-        prevCount = frontierCount
-        frontier = layer
-        frontierCount = layerCount
-      }
-      settled
-    } finally e.unpersist(false)
-  }
-
-  /** PER-SEED BFS distances — (seed, node, dist) for every seed and
-    * every node within `maxHops` of it: [[hopDistance]]'s loop with the
-    * seed label riding in the frontier key, so different seeds' waves
-    * expand independently in ONE fixpoint (state and shuffle are
-    * Σ per-seed reachability — size the seed SAMPLE accordingly; this
-    * is the bounded-radius, sampled-seed regime, not all-pairs).
-    */
-  def hopDistanceLabeled(edges: DataFrame, srcCol: String, dstCol: String,
-                         seeds: DataFrame, seedCol: String,
-                         maxHops: Int, undirected: Boolean = false): DataFrame = {
-    require(maxHops >= 0, "maxHops must be >= 0")
-    val e0 = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
-      .filter(col("u") =!= col("v"))
-    val e = (if (undirected) EdgeMirror.mirror(e0)
-             else e0)
-      .distinct().persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val seed0 = graft.LoopFrames.checkpoint(
-        seeds.select(col(seedCol).as("seed"))
-          .where(col("seed").isNotNull).distinct()
-          .withColumn("node", col("seed"))
-          .withColumn("dist", lit(0)))
-      // same lazy-union + counted-broadcast regime as [[hopDistance]];
-      // here the frontier/settled rows are (seed, node) pairs, so the
-      // broadcast gate bounds Σ per-seed reachability, not node count
-      var settled = seed0.toDF()
-      var settledCount = seed0.count()
-      var frontier = seed0.toDF()
-      var frontierCount = settledCount
-      // same undirected two-layer anti-join invariant as [[hopDistance]],
-      // holding independently within each seed's wave
-      var prevLayer = frontier
-      var prevCount = frontierCount
-      var hop = 0
-      while (hop < maxHops && frontierCount > 0) {
-        hop += 1
-        val fr = graft.LoopFrames.maybeBroadcast(
-          frontier.select(col("seed"), col("node").as("u")), frontierCount)
-        val (anti, antiCount) =
-          if (undirected && hop > 1)
-            (frontier.select(col("seed"), col("node"))
-               .unionByName(prevLayer.select(col("seed"), col("node"))),
-             frontierCount + prevCount)
-          else (settled.select(col("seed"), col("node")), settledCount)
-        val st = graft.LoopFrames.maybeBroadcast(anti, antiCount)
-        val layer = graft.LoopFrames.checkpoint(
-          e.join(fr, "u")
-            .select(col("seed"), col("v").as("node")).distinct()
-            .join(st, Seq("seed", "node"), "left_anti")
+            .select(keys.map(col) :+ col("v").as("node"): _*).distinct()
+            .join(st, keys :+ "node", "left_anti")
             .withColumn("dist", lit(hop)))
         val layerCount = layer.count()
         if (layerCount == 0L) graft.LoopFrames.release(layer)

@@ -1,7 +1,10 @@
 package graft.operators.graph
 
-import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** k-core decomposition (membership for a fixed k) by synchronous
@@ -62,6 +65,10 @@ import org.apache.spark.storage.StorageLevel
   * threshold; default 200k edges ≈ a few MB). Pass `localFinishEdges =
   * 0` to force pure distributed peeling (the scale-sweep setting).
   *
+  * [[run]] and [[coreness]] drive one [[Peel]] — the state above and its
+  * steps (initial degrees, decrement round, compaction, local finish) —
+  * and keep only their own outer loop and stop rule.
+  *
   * No reference counterpart; graph-analytics extension per the builder
   * prompt.
   */
@@ -111,13 +118,20 @@ object KCore {
     deg
   }
 
-  /** Collect a counted-small remnant into CSR form: (original node ids,
-    * adjIdx, adj). Edge endpoints not in the alive node list are skipped
-    * defensively (the compaction invariant makes them impossible, but a
-    * stale edge must never resurrect a peeled node).
+  /** A counted-small remnant in CSR form (original node ids, adjIdx,
+    * adj) with its Batagelj–Zaveršnik core numbers.
     */
-  private def collectRemnant(alive: DataFrame, e: DataFrame)
-  : (Array[Any], Array[Int], Array[Int]) = {
+  private final case class Remnant(nodes: Array[Any], adjIdx: Array[Int],
+                                   adj: Array[Int]) {
+    val core: Array[Int] = bzCoreNumbers(nodes.length, adjIdx, adj)
+  }
+
+  /** Collect a counted-small remnant into CSR form. Edge endpoints not in
+    * the alive node list are skipped defensively (the compaction
+    * invariant makes them impossible, but a stale edge must never
+    * resurrect a peeled node).
+    */
+  private def collectRemnant(alive: DataFrame, e: DataFrame): Remnant = {
     val nodes: Array[Any] = alive.select(col("node")).collect().map(_.get(0))
     val n = nodes.length
     val idx = new java.util.HashMap[Any, Integer](n * 2)
@@ -134,10 +148,108 @@ object KCore {
     val fill = java.util.Arrays.copyOf(adjIdx, n)
     val adj = new Array[Int](pairs.length)
     pairs.foreach { case (u, v) => adj(fill(u)) = v; fill(u) += 1 }
-    (nodes, adjIdx, adj)
+    Remnant(nodes, adjIdx, adj)
   }
 
-  /** Nodes of the k-core with their within-core degrees.
+  /** The delta-peel state and steps shared by [[run]] and [[coreness]]
+    * (see the object doc): the persisted mirrored edge table, the
+    * checkpointed (node, deg) `alive` frame — invariant: deg = degree
+    * within the current alive set — its exact count, and the compaction
+    * bookkeeping. Callers own the outer loop and stop rule, and call
+    * [[close]] in a `finally`.
+    */
+  private final class Peel(edges: DataFrame, srcCol: String, dstCol: String,
+                           localFinishEdges: Long) {
+    private var e = EdgeMirror.mirror(
+        edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
+          .filter(col("u") =!= col("v")))
+      .distinct().persist(StorageLevel.MEMORY_AND_DISK)
+    var alive: DataFrame = _
+    // true alive-node count, maintained exactly (ADVICE r16: a clamped
+    // estimate let the loop keep paying counts after the graph emptied)
+    var aliveCount = 0L
+    private var nodesAtCompact = 0L
+    private var peeledSince = 0L
+
+    /** Initial degrees — the full-degree aggregation happens exactly
+      * ONCE; every later round maintains `deg` by frontier decrements.
+      * True when the whole graph already fits the local finish.
+      */
+    def start(): Boolean = {
+      alive = e.groupBy(col("u").as("node"))
+        .agg(count(lit(1)).as("deg")).transform(graft.LoopFrames.materialize)
+      aliveCount = alive.count()
+      nodesAtCompact = aliveCount
+      localFinishEdges > 0L && aliveCount <= localFinishEdges &&
+        e.count() <= localFinishEdges
+    }
+
+    /** One frontier decrement round at level `k`: `peeled` (the counted
+      * `nPeeled` alive nodes with deg < k) leaves the alive set. True when
+      * a compaction just left a remnant small enough to finish locally.
+      */
+    def round(k: Int, peeled: DataFrame, nPeeled: Long): Boolean = {
+      // decrements: edges whose u endpoint just peeled, counted per v —
+      // only frontier-incident edges are aggregated, and the counted-small
+      // frontier is broadcast into the edge join (r20, guide §3.1): the
+      // persisted edge table is never re-shuffled
+      val dec = e.join(graft.LoopFrames.maybeBroadcast(
+          peeled.select(col("node").as("u")), nPeeled), "u")
+        .groupBy(col("v").as("node")).agg(count(lit(1)).as("__dec__"))
+      val next = alive.filter(col("deg") >= k)
+        .join(dec, Seq("node"), "left")
+        .select(col("node"),
+          (col("deg") - coalesce(col("__dec__"), lit(0L))).as("deg"))
+        .transform(graft.LoopFrames.materialize)
+      graft.LoopFrames.release(alive)
+      alive = next
+      aliveCount -= nPeeled
+      peeledSince += nPeeled
+      aliveCount > 0 && peeledSince * 2 >= nodesAtCompact && compact()
+    }
+
+    /** Half-peel compaction: once half the nodes alive at the last
+      * compaction have peeled, restrict the edge table to surviving
+      * endpoints. Stale edges are harmless (a peeled node never re-enters
+      * the frontier) but scanning them is not free, and a deep peel would
+      * otherwise scan the ORIGINAL table every round. Cost = one old-style
+      * round (two semi-joins + re-persist); the table then shrinks
+      * geometrically. True when the just-counted remnant fits the local
+      * finish.
+      */
+    private def compact(): Boolean = {
+      val compacted = e
+        .join(graft.LoopFrames.maybeBroadcast(
+          alive.select(col("node").as("u")), aliveCount), "u")
+        .join(graft.LoopFrames.maybeBroadcast(
+          alive.select(col("node").as("v")), aliveCount), "v")
+        .select(col("u"), col("v"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      val eCount = compacted.count() // materialize before dropping the old blocks
+      e.unpersist(false)
+      e = compacted
+      nodesAtCompact = aliveCount
+      peeledSince = 0L
+      localFinishEdges > 0L && eCount <= localFinishEdges &&
+        aliveCount <= localFinishEdges
+    }
+
+    /** Exact driver finish of the counted-small remnant (see object doc):
+      * `rows` turns its core numbers into output rows of `schema`; the
+      * alive frame is released.
+      */
+    def finishLocally(schema: StructType)(rows: Remnant => Seq[Row]): DataFrame = {
+      val out = e.sparkSession.createDataFrame(
+        rows(collectRemnant(alive, e)).asJava, schema)
+      graft.LoopFrames.release(alive)
+      out
+    }
+
+    def close(): Unit = e.unpersist(false)
+  }
+
+  /** Nodes of the k-core with their within-core degrees: the [[Peel]]
+    * driven at fixed k until nobody peels.
     *
     * @param edges directed edge list; both directions are added and
     *              deduplicated internally (pass an undirected pair list
@@ -148,110 +260,44 @@ object KCore {
           maxIter: Int = 30, localFinishEdges: Long = 200000L): DataFrame = {
     require(k >= 1, "k must be >= 1")
     require(maxIter >= 1, "maxIter must be >= 1")
-    val spark = edges.sparkSession
-    val e0 = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
-      .filter(col("u") =!= col("v"))
-    var e = EdgeMirror.mirror(e0)
-      .distinct().persist(StorageLevel.MEMORY_AND_DISK)
+    val p = new Peel(edges, srcCol, dstCol, localFinishEdges)
     try {
-      // full-degree aggregation happens exactly ONCE; every later round
-      // maintains `deg` by frontier decrements (invariant: deg = degree
-      // within the current alive set)
-      var alive = e.groupBy(col("u").as("node"))
-        .agg(count(lit(1)).as("deg")).transform(graft.LoopFrames.materialize)
-      // true alive-node count, maintained exactly (ADVICE r16: a clamped
-      // estimate let the loop keep paying counts after the graph emptied)
-      var aliveCount = alive.count()
-      var nodesAtCompact = aliveCount
-      var peeledSince = 0L
-      // exact driver finish of a counted-small remnant (see object doc):
       // k-core membership + within-core degrees from BZ core numbers
-      def finishLocally(): DataFrame = {
-        val (nodes, adjIdx, adj) = collectRemnant(alive, e)
-        val inCore = bzCoreNumbers(nodes.length, adjIdx, adj).map(_ >= k)
-        val rows = new java.util.ArrayList[org.apache.spark.sql.Row]()
-        var i = 0
-        while (i < nodes.length) {
-          if (inCore(i)) {
-            var d = 0L
-            var j = adjIdx(i)
-            while (j < adjIdx(i + 1)) { if (inCore(adj(j))) d += 1L; j += 1 }
-            rows.add(org.apache.spark.sql.Row(nodes(i), d))
-          }
-          i += 1
+      def finishLocally(): DataFrame = p.finishLocally(p.alive.schema) { r =>
+        val inCore = r.core.map(_ >= k)
+        r.nodes.indices.filter(inCore).map { i =>
+          Row(r.nodes(i),
+            (r.adjIdx(i) until r.adjIdx(i + 1)).count(j => inCore(r.adj(j))).toLong)
         }
-        val out = spark.createDataFrame(rows, alive.schema)
-        graft.LoopFrames.release(alive)
-        out
       }
-      if (localFinishEdges > 0L && aliveCount <= localFinishEdges &&
-          e.count() <= localFinishEdges) return finishLocally()
+      if (p.start()) return finishLocally()
       var iter = 0
       while (iter < maxIter) {
         // frontier = nodes falling below k under the CURRENT alive set;
         // derived from the checkpointed alive frame, so the uses below
         // (count + decrement join) re-run only a cheap filter
-        val peeled = alive.filter(col("deg") < k)
+        val peeled = p.alive.filter(col("deg") < k)
         val nPeeled = peeled.count()
         if (nPeeled == 0L) {
           // fixpoint: nobody peels, so `deg` is the within-core degree
-          return alive
+          return p.alive
         }
-        if (nPeeled == aliveCount) {
+        if (nPeeled == p.aliveCount) {
           // everything peels: the k-core is empty — skip the decrement
           // join and return the (empty, correctly-schema'd) survivor set
-          val empty = alive.filter(col("deg") >= k).transform(graft.LoopFrames.materialize)
-          graft.LoopFrames.release(alive)
+          val empty = p.alive.filter(col("deg") >= k).transform(graft.LoopFrames.materialize)
+          graft.LoopFrames.release(p.alive)
           return empty
         }
-        // decrements: edges whose u endpoint just peeled, counted per v —
-        // only frontier-incident edges are aggregated, and the frontier
-        // side is broadcast-small on real graphs
-        // broadcast the counted-small frontier into the edge join (r20,
-        // guide §3.1): the persisted edge table is never re-shuffled
-        val dec = e.join(graft.LoopFrames.maybeBroadcast(
-            peeled.select(col("node").as("u")), nPeeled), "u")
-          .groupBy(col("v").as("node")).agg(count(lit(1)).as("__dec__"))
-        val next = alive.filter(col("deg") >= k)
-          .join(dec, Seq("node"), "left")
-          .select(col("node"),
-            (col("deg") - coalesce(col("__dec__"), lit(0L))).as("deg"))
-          .transform(graft.LoopFrames.materialize)
-        graft.LoopFrames.release(alive)
-        alive = next
         iter += 1
-        // compact the edge table once half the nodes alive at the last
-        // compaction have peeled: stale edges are harmless (a peeled
-        // node never re-enters the frontier) but scanning them is not
-        // free, and a deep peel would otherwise scan the ORIGINAL table
-        // every round. Cost = one old-style round (two semi-joins +
-        // re-persist); the table then shrinks geometrically.
-        aliveCount -= nPeeled
-        peeledSince += nPeeled
-        if (peeledSince * 2 >= nodesAtCompact) {
-          val compacted = e
-            .join(graft.LoopFrames.maybeBroadcast(
-              alive.select(col("node").as("u")), aliveCount), "u")
-            .join(graft.LoopFrames.maybeBroadcast(
-              alive.select(col("node").as("v")), aliveCount), "v")
-            .select(col("u"), col("v"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-          val eCount = compacted.count() // materialize before dropping the old blocks
-          e.unpersist(false)
-          e = compacted
-          nodesAtCompact = aliveCount
-          peeledSince = 0L
-          // remnant just counted ≤ threshold: finish exactly on the driver
-          if (localFinishEdges > 0L && eCount <= localFinishEdges &&
-              aliveCount <= localFinishEdges) return finishLocally()
-        }
+        if (p.round(k, peeled, nPeeled)) return finishLocally()
       }
       // the alive count is monotone decreasing, so non-convergence in
       // maxIter rounds means the peel is still stripping layers — a bound
       // set too low (deep-peel graph), not a data error
       throw new IllegalStateException(
-        s"k-core peel did not converge in $maxIter rounds (alive=${alive.count()})")
-    } finally e.unpersist(false)
+        s"k-core peel did not converge in $maxIter rounds (alive=${p.alive.count()})")
+    } finally p.close()
   }
 
   /** Full k-core DECOMPOSITION: per-node core number (`coreness(v)` =
@@ -266,15 +312,14 @@ object KCore {
     * level. The classic degeneracy screen — one number per node instead
     * of one membership query per k.
     *
-    * One CONTINUOUS delta-peel: the maintained `deg` invariant (degree
-    * within the current alive set) carries across levels, so raising k
-    * needs no re-aggregation — the level-k peel starts exactly where
-    * level k−1's fixpoint left off, and nodes peeled while targeting the
-    * k-core get coreness k−1 (Batagelj–Zaveršnik's order, level-
-    * synchronous). Total cost = Σ per-level peel rounds, each round
-    * frontier-incident work with the same compaction as [[run]]; the
-    * accumulated result is a lazy union of small per-round checkpoints
-    * (each materialized BEFORE its parent alive frame is released).
+    * One CONTINUOUS [[Peel]] raising k: the maintained `deg` invariant
+    * carries across levels, so raising k needs no re-aggregation — the
+    * level-k peel starts exactly where level k−1's fixpoint left off, and
+    * nodes peeled while targeting the k-core get coreness k−1
+    * (Batagelj–Zaveršnik's order, level-synchronous). Total cost = Σ
+    * per-level peel rounds; the accumulated result is a lazy union of
+    * small per-round checkpoints (each materialized BEFORE its parent
+    * alive frame is released).
     *
     * MIN-DEGREE LEVEL JUMP (r17 — p126 run-to-empty paid one full
     * convergence check per level between consecutive core values, the
@@ -298,52 +343,34 @@ object KCore {
                localFinishEdges: Long = 200000L): DataFrame = {
     require(maxK >= 0, "maxK must be >= 1, or 0 for run-to-empty (true coreness)")
     require(maxIterPerLevel >= 1, "maxIterPerLevel must be >= 1")
-    val spark = edges.sparkSession
-    val e0 = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
-      .filter(col("u") =!= col("v"))
-    var e = EdgeMirror.mirror(e0)
-      .distinct().persist(StorageLevel.MEMORY_AND_DISK)
+    val p = new Peel(edges, srcCol, dstCol, localFinishEdges)
     try {
-      var alive = e.groupBy(col("u").as("node"))
-        .agg(count(lit(1)).as("deg")).transform(graft.LoopFrames.materialize)
-      // true alive-node count, maintained exactly (ADVICE r16) — both the
-      // level-loop exit and the compaction baseline read it directly, so
-      // the peel never runs no-op levels over an empty alive frame
-      var aliveCount = alive.count()
-      var nodesAtCompact = aliveCount
-      var peeledSince = 0L
+      val small = p.start()
       var result: Option[DataFrame] = None
       var k = 1
       var iter = 0 // rounds spent at the current level
-      val outSchema = org.apache.spark.sql.types.StructType(Seq(
-        alive.schema("node"),
-        org.apache.spark.sql.types.StructField("coreness",
-          org.apache.spark.sql.types.LongType, nullable = false)))
-      // exact driver finish (see object doc): continuing the peel at level
-      // k over the remnant equals max(BZ core number within the remnant,
-      // k−1) — every straggler not in the remnant's k-core has coreness
-      // k−1 by the alive invariant; a clamped run caps at maxK
+      val outSchema = StructType(Seq(p.alive.schema("node"),
+        StructField("coreness", LongType, nullable = false)))
+      // continuing the peel at level k over the remnant equals max(BZ core
+      // number within the remnant, k−1) — every straggler not in the
+      // remnant's k-core has coreness k−1 by the alive invariant; a
+      // clamped run caps at maxK
       def finishLocally(): DataFrame = {
-        val (nodes, adjIdx, adj) = collectRemnant(alive, e)
-        val cs = bzCoreNumbers(nodes.length, adjIdx, adj)
-        val rows = new java.util.ArrayList[org.apache.spark.sql.Row]()
-        var i = 0
-        while (i < nodes.length) {
-          var c = math.max(cs(i).toLong, (k - 1).toLong)
-          if (maxK > 0 && c > maxK) c = maxK.toLong
-          rows.add(org.apache.spark.sql.Row(nodes(i), c))
-          i += 1
+        val local = p.finishLocally(outSchema) { r =>
+          r.nodes.indices.map { i =>
+            val c = math.max(r.core(i).toLong, (k - 1).toLong)
+            Row(r.nodes(i), if (maxK > 0 && c > maxK) maxK.toLong else c)
+          }
         }
-        val local = spark.createDataFrame(rows, outSchema)
-        graft.LoopFrames.release(alive)
         result.map(_.unionByName(local)).getOrElse(local)
       }
-      if (localFinishEdges > 0L && aliveCount <= localFinishEdges &&
-          e.count() <= localFinishEdges) return finishLocally()
-      while ((maxK == 0 || k <= maxK) && aliveCount > 0) {
+      if (small) return finishLocally()
+      // the level-loop exit reads the exact alive count, so the peel never
+      // runs no-op levels over an empty alive frame
+      while ((maxK == 0 || k <= maxK) && p.aliveCount > 0) {
         // ONE node-sized aggregation per round: min alive degree (for the
         // level jump) + frontier size at the current level, one pass
-        val row = alive.agg(min(col("deg")).as("m"),
+        val row = p.alive.agg(min(col("deg")).as("m"),
           count(when(col("deg") < k, 1)).as("below")).head()
         val minDeg = row.getLong(0)
         var nPeeled = row.getLong(1)
@@ -358,56 +385,27 @@ object KCore {
           if (maxK == 0 || k <= maxK) {
             // frontier size at the new level (= |deg == minDeg| > 0); paid
             // once per DISTINCT core value, not per round
-            nPeeled = alive.filter(col("deg") < k).count()
+            nPeeled = p.alive.filter(col("deg") < k).count()
           }
         }
         if (maxK == 0 || k <= maxK) {
           iter += 1
           if (iter > maxIterPerLevel) throw new IllegalStateException(
             s"coreness peel at level $k did not converge in $maxIterPerLevel rounds")
-          val peeled = alive.filter(col("deg") < k)
+          val peeled = p.alive.filter(col("deg") < k)
           // materialize the level slice BEFORE releasing its parent
           val lvl = graft.LoopFrames.checkpoint(
             peeled.select(col("node")).withColumn("coreness", lit((k - 1).toLong)))
           result = Some(result.map(_.unionByName(lvl)).getOrElse(lvl))
-          // broadcast the counted-small frontier into the edge join (r20)
-          val dec = e.join(graft.LoopFrames.maybeBroadcast(
-              peeled.select(col("node").as("u")), nPeeled), "u")
-            .groupBy(col("v").as("node")).agg(count(lit(1)).as("__dec__"))
-          val next = alive.filter(col("deg") >= k)
-            .join(dec, Seq("node"), "left")
-            .select(col("node"),
-              (col("deg") - coalesce(col("__dec__"), lit(0L))).as("deg"))
-            .transform(graft.LoopFrames.materialize)
-          graft.LoopFrames.release(alive)
-          alive = next
-          aliveCount -= nPeeled
-          peeledSince += nPeeled
-          if (aliveCount > 0 && peeledSince * 2 >= nodesAtCompact) {
-            val compacted = e
-              .join(graft.LoopFrames.maybeBroadcast(
-                alive.select(col("node").as("u")), aliveCount), "u")
-              .join(graft.LoopFrames.maybeBroadcast(
-                alive.select(col("node").as("v")), aliveCount), "v")
-              .select(col("u"), col("v"))
-              .persist(StorageLevel.MEMORY_AND_DISK)
-            val eCount = compacted.count()
-            e.unpersist(false)
-            e = compacted
-            nodesAtCompact = aliveCount
-            peeledSince = 0L
-            // remnant just counted ≤ threshold: finish on the driver
-            if (localFinishEdges > 0L && eCount <= localFinishEdges &&
-                aliveCount <= localFinishEdges) return finishLocally()
-          }
+          if (p.round(k, peeled, nPeeled)) return finishLocally()
         }
       }
       // clamped run: survivors report maxK ("≥ maxK"); run-to-empty exits
       // only at aliveCount == 0, so the survivor frame is empty and every
       // node already carries its true core number in `result`
-      val survivors = alive.select(col("node"))
+      val survivors = p.alive.select(col("node"))
         .withColumn("coreness", lit(maxK.toLong))
       result.map(_.unionByName(survivors)).getOrElse(survivors)
-    } finally e.unpersist(false)
+    } finally p.close()
   }
 }

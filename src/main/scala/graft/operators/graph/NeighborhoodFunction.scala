@@ -85,19 +85,19 @@ object NeighborhoodFunction {
       // formulations feed hll_union_agg the identical contribution
       // multiset (e is distinct), and the union is register-wise max
       // (order-free), so the sketches — and the estimates — are
-      // bit-identical either way.
+      // bit-identical either way. The in-degree is probed with a plain
+      // count BEFORE any list is built: the cap must stop the celebrity
+      // list from ever being materialized, not discard it afterwards.
       val degCap = spark.conf.getOption(AdjacencyMaxDegreeKey)
         .flatMap(_.toLongOption).getOrElse(4000000L)
       val adjacency: Option[DataFrame] =
         if (degCap <= 0) None
         else {
-          val adj = e.groupBy(col("v"))
-            .agg(collect_list(col("u")).as("us"), count(lit(1)).as("__deg__"))
-          val a = graft.LoopFrames.checkpoint(adj)
-          val degRow = a.agg(max(col("__deg__"))).head
+          val degRow = e.groupBy(col("v")).count().agg(max(col("count"))).head()
           val maxDeg = if (degRow.isNullAt(0)) 0L else degRow.getLong(0)
-          if (maxDeg <= degCap) Some(a.select(col("v"), col("us")))
-          else { graft.LoopFrames.release(a); None }
+          if (maxDeg > degCap) None
+          else Some(graft.LoopFrames.checkpoint(
+            e.groupBy(col("v")).agg(collect_list(col("u")).as("us"))))
         }
       // ball state at hop 0: each node's sketch holds just itself
       var sk = graft.LoopFrames.checkpoint(

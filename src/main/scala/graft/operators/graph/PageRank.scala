@@ -42,6 +42,10 @@ import org.apache.spark.storage.StorageLevel
   * if executor loss matters — the algorithm is oblivious. Dangling mass is a 1-row aggregate broadcast back
   * in-plan (no driver round-trip beyond job scheduling).
   *
+  * One loop: [[run]], [[runWeighted]] and [[TrustRank.run]] differ only
+  * in the per-edge share, the teleport divisor and which nodes receive
+  * teleport mass, so all three delegate to the [[propagate]] kernel.
+  *
   * No reference counterpart; classic-OLAP/graph extension per the
   * builder prompt (cf. GraphX's Pregel PageRank — re-expressed
   * relationally so Catalyst sees every stage).
@@ -54,6 +58,8 @@ object PageRank {
     * type (kept as-is — prefer integral ids: a numeric node key
     * shuffles and joins measurably cheaper than a string one at every
     * scale; encode typed vertices as disjoint ranges, e.g. 2k / 2k+1).
+    * Delegates to the shared [[propagate]] kernel with share
+    * `r div outdeg`, divisor N and a uniform teleport term.
     */
   def run(edges: DataFrame, srcCol: String, dstCol: String,
           iterations: Int = 5, unit: Long = 1000000000000L,
@@ -65,72 +71,21 @@ object PageRank {
     // input-sized shuffle here
     val e = (if (edgesDistinct) sel else sel.distinct())
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .transform(graft.LoopFrames.materialize)
-    val n = nodes.count()
-    require(n > 0, "PageRank over an empty edge set (no nodes)")
-    // counted-small node set → broadcast the rank frame into each round's
-    // edge join (guide §3.1): the per-round exchange+sort of the edge
-    // table disappears; join strategy cannot change the exact integer
-    // results. Gated on the ACTUAL node count vs graft.graph.broadcastNodes.
-    val bcast = graft.LoopFrames.broadcastable(e.sparkSession, n)
+    val (nodes, n) = countedNodes(e)
     val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-    // edge+degree table is iteration-invariant. Broadcast regime: build it
-    // with a broadcast join (no exchange at all — e's persisted layout is
-    // reused) since no iteration needs src partitioning any more. Shuffle
-    // regime (huge node sets): persist it partitioned on src so each
-    // iteration's rank join reuses one exchange.
-    val edgesDeg = (if (bcast) e.join(broadcast(outdeg), "src")
-                    else e.join(outdeg, "src").repartition(col("src")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val base = (15L * unit) / (100L * n)
-    // iteration-invariant sink set (nodes with no out-edges); when it is
-    // EMPTY (every undirected graph) dm is identically 0, so the per-round
-    // dangling aggregation job is skipped outright — same exact algebra
-    val sinks = nodes.join(outdeg, nodes("node") === outdeg("src"), "left_anti")
-      .transform(graft.LoopFrames.materialize)
-    val haveSinks = !sinks.isEmpty
-    var ranks = nodes.withColumn("r", lit(unit / n)).transform(graft.LoopFrames.materialize)
-    for (_ <- 1 to iterations) {
-      val rk = if (bcast) broadcast(ranks) else ranks
-      val inSum = edgesDeg
-        .join(rk, edgesDeg("src") === rk("node"))
-        // integral `div`, NOT double `/`+cast: a quotient one ulp under an
-        // integer would round up in double and truncate to the wrong floor
-        .select(col("dst"), expr("r div outdeg").as("share"))
-        .groupBy(col("dst")).agg(sum(col("share")).as("insum"))
-      val prev = ranks
-      val merged = nodes.join(inSum, nodes("node") === inSum("dst"), "left")
-      ranks = (if (haveSinks) {
-          val dangling = ranks.join(sinks, "node", "left_semi")
-            .agg(coalesce(sum(col("r")), lit(0L)).as("dm"))
-          merged.crossJoin(broadcast(dangling))
-            .select(col("node"),
-              (lit(base) + expr(s"(85 * (coalesce(insum, 0L) + dm div ${n}L)) div 100"))
-                .as("r"))
-        } else merged.select(col("node"),
-          (lit(base) + expr("(85 * coalesce(insum, 0L)) div 100")).as("r")))
-        .transform(graft.LoopFrames.materialize) // eager: materialize + truncate lineage
-      // RDD-level release: Dataset.unpersist no-ops on checkpoint blocks
-      graft.LoopFrames.release(prev)
-    }
-    // the result is the final eager checkpoint — the iteration-invariant
-    // frames can be freed now rather than waiting on the ContextCleaner
-    e.unpersist(false)
-    edgesDeg.unpersist(false)
-    graft.LoopFrames.release(nodes)
-    graft.LoopFrames.release(sinks)
-    ranks.select(col("node"), col("r").as("rank_fp"),
-      (col("r").cast("double") / unit.toDouble).as("rank"))
+    // integral `div`, NOT double `/`+cast: a quotient one ulp under an
+    // integer would round up in double and truncate to the wrong floor
+    propagate(e, outdeg, "r div outdeg", nodes, n, n, identity,
+      iterations, unit, "rank")
   }
 
   /** Weighted PageRank: a node's rank splits across its out-edges in
     * proportion to integer edge weights instead of uniformly —
     * share(u→v) = ⌊r(u)·w/sw(u)⌋ (sw = u's weight total; duplicate
     * (src,dst) rows ADD their weights, multigraph semantics; rows with
-    * w ≤ 0 are dropped). Same exact fixed-point contract as [[run]]:
-    * the share is computed by the overflow-safe split
+    * w ≤ 0 are dropped). Same exact fixed-point contract and the same
+    * [[propagate]] kernel as [[run]]: the share is computed by the
+    * overflow-safe split
     * `w·(r div sw) + ((r mod sw)·w) div sw`, which equals
     * ⌊r·w/sw⌋ identically (so an oracle may compute the product form in
     * wide integers) while every intermediate stays ≤ max(r, sw²) —
@@ -147,52 +102,99 @@ object PageRank {
       .filter(col("w") > 0)
     val e = sel.groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .transform(graft.LoopFrames.materialize)
-    val n = nodes.count()
-    require(n > 0, "PageRank over an empty edge set (no nodes)")
+    val (nodes, n) = countedNodes(e)
     val swt = e.groupBy(col("src")).agg(sum(col("w")).as("sw"))
     val maxSw = swt.agg(max(col("sw"))).collect()(0).getLong(0)
     require(maxSw <= 3037000499L, // floor(sqrt(Long.MaxValue))
       s"weighted PageRank: a node carries weight mass $maxSw > sqrt(Long.Max) " +
         "— rescale weights (the exact share split would overflow)")
-    // same broadcast/sink-skip regime as [[run]] (which see)
+    propagate(e, swt, "w * (r div sw) + ((r % sw) * w) div sw", nodes, n, n,
+      identity, iterations, unit, "rank")
+  }
+
+  /** The materialized distinct endpoint set of `e` and its count. */
+  private def countedNodes(e: DataFrame): (DataFrame, Long) = {
+    val nodes = e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node"))).distinct()
+      .transform(graft.LoopFrames.materialize)
+    val n = nodes.count()
+    require(n > 0, "PageRank over an empty edge set (no nodes)")
+    (nodes, n)
+  }
+
+  /** The one rank-propagation loop behind [[run]], [[runWeighted]] and
+    * [[TrustRank.run]] (see the object doc for the recurrence and the
+    * two join regimes).
+    *
+    * @param e       persisted (src, dst, …) edge table; unpersisted here
+    * @param deg     per-src divisor table joined onto `e` on `src`; a
+    *                node absent from it is a sink
+    * @param share   SQL for one edge's share of `r` over the joined row
+    * @param nodes   materialized node frame (`node` first, plus any
+    *                column `onSeeds` reads); released here
+    * @param n       counted row count of `nodes` (broadcast gate)
+    * @param divisor N for PageRank, the seed count S for TrustRank
+    * @param onSeeds confines a SQL term to the teleport targets:
+    *                identity for PageRank, `CASE WHEN is_seed …` for
+    *                TrustRank — applied to r0, the teleport term and the
+    *                dangling share
+    * @return (node, `out`_fp, `out`)
+    */
+  private[graph] def propagate(e: DataFrame, deg: DataFrame, share: String,
+                               nodes: DataFrame, n: Long, divisor: Long,
+                               onSeeds: String => String, iterations: Int,
+                               unit: Long, out: String): DataFrame = {
+    // counted-small node set → broadcast the rank frame into each round's
+    // edge join (guide §3.1): the per-round exchange+sort of the edge
+    // table disappears; join strategy cannot change the exact integer
+    // results. Gated on the ACTUAL node count vs graft.graph.broadcastNodes.
     val bcast = graft.LoopFrames.broadcastable(e.sparkSession, n)
-    val edgesW = (if (bcast) e.join(broadcast(swt), "src")
-                  else e.join(swt, "src").repartition(col("src")))
+    // edge+divisor table is iteration-invariant. Broadcast regime: build it
+    // with a broadcast join (no exchange at all — e's persisted layout is
+    // reused) since no iteration needs src partitioning any more. Shuffle
+    // regime (huge node sets): persist it partitioned on src so each
+    // iteration's rank join reuses one exchange.
+    val edgesDeg = (if (bcast) e.join(broadcast(deg), "src")
+                    else e.join(deg, "src").repartition(col("src")))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val base = (15L * unit) / (100L * n)
-    val sinks = nodes.join(swt, nodes("node") === swt("src"), "left_anti")
+    val base = (15L * unit) / (100L * divisor)
+    // iteration-invariant sink set (nodes with no out-edges); when it is
+    // EMPTY (every undirected graph) dm is identically 0, so the per-round
+    // dangling aggregation job is skipped outright — same exact algebra
+    val ids = nodes.select(col("node"))
+    val sinks = ids.join(deg, ids("node") === deg("src"), "left_anti")
       .transform(graft.LoopFrames.materialize)
     val haveSinks = !sinks.isEmpty
-    var ranks = nodes.withColumn("r", lit(unit / n)).transform(graft.LoopFrames.materialize)
+    val dangling = if (haveSinks) s" + ${onSeeds(s"dm div ${divisor}L")}" else ""
+    val next = expr(s"${onSeeds(s"${base}L")} + " +
+      s"(85 * (coalesce(insum, 0L)$dangling)) div 100").as("r")
+    var ranks = nodes.select(col("node"), expr(onSeeds(s"${unit / divisor}L")).as("r"))
+      .transform(graft.LoopFrames.materialize)
     for (_ <- 1 to iterations) {
       val rk = if (bcast) broadcast(ranks) else ranks
-      val inSum = edgesW
-        .join(rk, edgesW("src") === rk("node"))
-        .select(col("dst"),
-          expr("w * (r div sw) + ((r % sw) * w) div sw").as("share"))
+      val inSum = edgesDeg
+        .join(rk, edgesDeg("src") === rk("node"))
+        .select(col("dst"), expr(share).as("share"))
         .groupBy(col("dst")).agg(sum(col("share")).as("insum"))
       val prev = ranks
       val merged = nodes.join(inSum, nodes("node") === inSum("dst"), "left")
       ranks = (if (haveSinks) {
-          val dangling = ranks.join(sinks, "node", "left_semi")
+          val dm = ranks.join(sinks, "node", "left_semi")
             .agg(coalesce(sum(col("r")), lit(0L)).as("dm"))
-          merged.crossJoin(broadcast(dangling))
-            .select(col("node"),
-              (lit(base) + expr(s"(85 * (coalesce(insum, 0L) + dm div ${n}L)) div 100"))
-                .as("r"))
-        } else merged.select(col("node"),
-          (lit(base) + expr("(85 * coalesce(insum, 0L)) div 100")).as("r")))
-        .transform(graft.LoopFrames.materialize)
+          merged.crossJoin(broadcast(dm))
+        } else merged)
+        .select(col("node"), next)
+        .transform(graft.LoopFrames.materialize) // eager: materialize + truncate lineage
+      // RDD-level release: Dataset.unpersist no-ops on checkpoint blocks
       graft.LoopFrames.release(prev)
     }
+    // the result is the final eager checkpoint — the iteration-invariant
+    // frames can be freed now rather than waiting on the ContextCleaner
     e.unpersist(false)
-    edgesW.unpersist(false)
+    edgesDeg.unpersist(false)
     graft.LoopFrames.release(nodes)
     graft.LoopFrames.release(sinks)
-    ranks.select(col("node"), col("r").as("rank_fp"),
-      (col("r").cast("double") / unit.toDouble).as("rank"))
+    ranks.select(col("node"), col("r").as(s"${out}_fp"),
+      (col("r").cast("double") / unit.toDouble).as(out))
   }
 }

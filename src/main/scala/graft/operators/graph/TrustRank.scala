@@ -24,11 +24,11 @@ import org.apache.spark.storage.StorageLevel
   * — teleport AND dangling mass both go to seeds only, per the
   * personalized random-surfer model; r0 = U div S on seeds, 0 elsewhere.
   *
-  * Scale shape: identical to PageRank — K iterations = K edge shuffles
-  * against a src-partitioned persisted edge table, rank frames
-  * `localCheckpoint`ed per round and released at the RDD level
-  * ([[graft.LoopFrames]]). The seed count is one driver-side count on
-  * the (small, caller-curated) seed set.
+  * Runs on [[PageRank.propagate]], the one rank-propagation loop it
+  * shares with [[PageRank]] (same join regimes, per-round checkpoints
+  * and releases), with divisor S and every seed-dependent term gated on
+  * `is_seed`. The seed count is one driver-side count on the (small,
+  * caller-curated) seed set.
   *
   * No reference counterpart; graph/web-curation extension per the
   * builder prompt.
@@ -66,51 +66,10 @@ object TrustRank {
       .select(col("node"), col("__seed__").isNotNull.as("is_seed"))
       .transform(graft.LoopFrames.materialize)
     val n = nodes.count()
-    // counted-small node set → broadcast the rank frame into each round's
-    // edge join; same regime + justification as [[PageRank.run]]
-    val bcast = graft.LoopFrames.broadcastable(e.sparkSession, n)
     val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-    val edgesDeg = (if (bcast) e.join(broadcast(outdeg), "src")
-                    else e.join(outdeg, "src").repartition(col("src")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val base = (15L * unit) / (100L * s)
-    val sinks = nodes.select(col("node"))
-      .join(outdeg, nodes("node") === outdeg("src"), "left_anti")
-      .transform(graft.LoopFrames.materialize)
-    val haveSinks = !sinks.isEmpty
-    var ranks = nodes
-      .select(col("node"),
-        when(col("is_seed"), lit(unit / s)).otherwise(lit(0L)).as("r"))
-      .transform(graft.LoopFrames.materialize)
-    for (_ <- 1 to iterations) {
-      val rk = if (bcast) broadcast(ranks) else ranks
-      val inSum = edgesDeg
-        .join(rk, edgesDeg("src") === rk("node"))
-        .select(col("dst"), expr("r div outdeg").as("share"))
-        .groupBy(col("dst")).agg(sum(col("share")).as("insum"))
-      val prev = ranks
-      val merged = nodes.join(inSum, nodes("node") === inSum("dst"), "left")
-      ranks = (if (haveSinks) {
-          val dangling = ranks.join(sinks, "node", "left_semi")
-            .agg(coalesce(sum(col("r")), lit(0L)).as("dm"))
-          merged.crossJoin(broadcast(dangling))
-            .select(col("node"),
-              (when(col("is_seed"), lit(base)).otherwise(lit(0L)) +
-                expr(s"(85 * (coalesce(insum, 0L) + " +
-                  s"CASE WHEN is_seed THEN dm div ${s}L ELSE 0L END)) div 100"))
-                .as("r"))
-        } else merged.select(col("node"),
-          (when(col("is_seed"), lit(base)).otherwise(lit(0L)) +
-            expr("(85 * coalesce(insum, 0L)) div 100")).as("r")))
-        .transform(graft.LoopFrames.materialize)
-      graft.LoopFrames.release(prev)
-    }
-    e.unpersist(false)
-    edgesDeg.unpersist(false)
-    graft.LoopFrames.release(nodes)
-    graft.LoopFrames.release(sinks)
+    val trust = PageRank.propagate(e, outdeg, "r div outdeg", nodes, n, s,
+      t => s"CASE WHEN is_seed THEN $t ELSE 0L END", iterations, unit, "trust")
     graft.LoopFrames.release(seedSet)
-    ranks.select(col("node"), col("r").as("trust_fp"),
-      (col("r").cast("double") / unit.toDouble).as("trust"))
+    trust
   }
 }

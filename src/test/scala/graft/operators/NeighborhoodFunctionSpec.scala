@@ -1,5 +1,9 @@
 package graft.operators
 
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 import graft.operators.graph.{Bfs, NeighborhoodFunction}
@@ -90,6 +94,59 @@ class NeighborhoodFunctionSpec extends AnyFunSuite {
     // same rows under a cap the max in-degree EXCEEDS (gate falls back)
     val viaGate = runWith("1")
     assert(viaGate == viaEdges)
+  }
+
+  /** The executed plan of every query `body` runs, in order. Listener
+    * events arrive asynchronously but in order, so two marker queries
+    * bracket exactly the window that belongs to `body`.
+    */
+  private def executedPlans[A](body: => A): (A, Seq[String]) = {
+    val seen = new LinkedBlockingQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+                             durationNs: Long): Unit =
+        seen.add(qe.executedPlan.toString)
+      override def onFailure(funcName: String, qe: QueryExecution,
+                             exception: Exception): Unit =
+        seen.add(qe.executedPlan.toString)
+    }
+    def marker(tag: String): Unit = spark.range(1).selectExpr(s"id AS $tag").collect()
+    spark.listenerManager.register(listener)
+    try {
+      marker("plans_window_open")
+      val out = body
+      marker("plans_window_close")
+      val plans = Seq.newBuilder[String]
+      var p = seen.poll(60, TimeUnit.SECONDS)
+      while (p != null && !p.contains("plans_window_close")) {
+        plans += p
+        p = seen.poll(60, TimeUnit.SECONDS)
+      }
+      assert(p != null, "the listener never saw the closing marker")
+      (out, plans.result().dropWhile(!_.contains("plans_window_open")).drop(1))
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("adjacency cap below a celebrity in-degree never builds the collect_list adjacency") {
+    import spark.implicits._
+    // node 0 has in-degree 20; the rest is a sparse ring
+    val edges = (1L to 20L).map(i => (i, 0L)) ++ (1L to 20L).map(i => (i, i % 20L + 1L))
+    def runWith(adjCap: String): (Seq[(Long, Int, Long)], Seq[String]) = {
+      spark.conf.set(NeighborhoodFunction.AdjacencyMaxDegreeKey, adjCap)
+      try executedPlans {
+        NeighborhoodFunction.run(edges.toDF("s", "d"), "s", "d", maxHops = 3)
+          .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq.sorted
+      } finally spark.conf.unset(NeighborhoodFunction.AdjacencyMaxDegreeKey)
+    }
+    val (uncapped, uncappedPlans) = runWith("4000000")
+    // the listener sees the checkpoint jobs, collect_list included, when
+    // the adjacency is built — so its absence below is not vacuous
+    assert(uncappedPlans.exists(_.contains("collect_list")))
+    val (capped, cappedPlans) = runWith("5")
+    assert(cappedPlans.exists(_.contains("hll_sketch_agg")))
+    assert(!cappedPlans.exists(_.contains("collect_list")),
+      cappedPlans.filter(_.contains("collect_list")).mkString("\n"))
+    assert(capped == uncapped)
   }
 
   test("sketch centrality matches exact harmonic (scaled) on a seeded random graph") {

@@ -80,8 +80,11 @@ class TrustRankSpec extends AnyFunSuite {
 
   test("seeding EVERY node degenerates to PageRank bit-for-bit") {
     // with seeds = all nodes, the teleport term is 15U/(100N) everywhere
-    // and dangling mass spreads dm/N — exactly PageRank's recurrence, so
-    // the two independent implementations must agree on every long
+    // and dangling mass spreads dm/N — exactly PageRank's recurrence. Both
+    // run the one PageRank.propagate kernel, so this pins the seed gating
+    // (every `is_seed` term must reduce to PageRank's ungated term), not a
+    // second implementation; the independent references are the naive
+    // driver replays here and in GraphPropertySpec
     import spark.implicits._
     val rnd = new scala.util.Random(31337)
     val edges = Seq.fill(150)((rnd.nextInt(30).toLong, rnd.nextInt(30).toLong))
