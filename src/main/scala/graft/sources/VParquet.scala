@@ -36,12 +36,13 @@ import org.apache.spark.sql.functions._
   *    That reference-not-copy carry-forward is what makes this layout
   *    survive 100 TB CDC.
   *
-  * Concurrency: the create-exclusive manifest makes every commit atomic.
-  * Bucketed merges add OPTIMISTIC retry on top — a writer that loses the
+  * Concurrency: the create-exclusive manifest makes every commit atomic,
+  * and every commit goes through one loop ([[commit]]). Bucketed merges
+  * and compactions add OPTIMISTIC retry on top — a writer that loses the
   * version claim re-reads the new head and, if the interleaved commits
-  * didn't touch the buckets it read, rebases its already-written data
+  * didn't touch the files it read, rebases its already-written data
   * files onto the next version (so CDC writers sharded by key range run
-  * concurrently). Overlapping writers and non-merge commits keep the loud
+  * concurrently). Overlapping writers and other commits keep the loud
   * single-writer error. Schema is assumed stable across versions.
   */
 object VParquet {
@@ -212,6 +213,68 @@ object VParquet {
       case None => base
     }
     (withOwn, true)
+  }
+
+  /** The one optimistic commit loop: claim the version after `head` with
+    * `build(head)`, stamped with that version and the rebased txn ledger.
+    * With `rebase = None` a lost claim throws. With `Some(conflict)` the
+    * loser re-reads the new head: if this writer's txn is already there it
+    * returns that version, if `conflict(newHead)` names a reason it throws,
+    * otherwise it rebuilds on the new head and retries (8 attempts).
+    */
+  private[sources] def commit(spark: SparkSession, table: String, head: Option[Manifest],
+                              txn: Option[Long], txnAppId: Option[String],
+                              rebase: Option[Manifest => Option[String]])
+                             (build: Option[Manifest] => Manifest): Long = {
+    var base = head
+    var attempts = 0
+    while (true) {
+      val v = base.map(_.version + 1).getOrElse(0L)
+      val (seen, seenOk) = nextTxnSeen(spark, table, base, txn, txnAppId)
+      try {
+        writeManifest(spark, table,
+          build(base).copy(version = v, txnSeen = seen, txnSeenOk = seenOk))
+        return v
+      } catch {
+        case e: ConcurrentWriteException =>
+          attempts += 1
+          val conflict = rebase.getOrElse(throw e)
+          if (attempts > 8) throw e
+          val latest = latestVersion(spark, table).getOrElse(throw e)
+          val lm = readManifest(spark, table, latest)
+          if (alreadyCommittedAnyVersion(spark, table, txn, txnAppId)) return latest
+          conflict(lm).foreach(why => throw new ConcurrentWriteException(why, e))
+          base = Some(lm)
+      }
+    }
+    -1L // unreachable
+  }
+
+  private def inBuckets(touched: Set[Int])(f: FileEntry): Boolean =
+    f.bucket < 0 || touched.contains(f.bucket) // unbucketed files hold any key
+
+  /** A bucketed merge rebases iff the new head keeps the bucket count and
+    * every file the merge READ (`read`: its touched buckets + unbucketed
+    * files): its rewrite is then still valid, so writers on disjoint
+    * buckets both commit (multi-writer CDC sharded by key range).
+    */
+  private[sources] def mergeRebase(table: String, n: Int, touched: Set[Int],
+                                   read: Seq[FileEntry]): Manifest => Option[String] =
+    lm => if (lm.numBuckets == n && lm.files.filter(inBuckets(touched)).toSet == read.toSet) None
+      else Some(s"vparquet: concurrent write on $table touched this merge's " +
+        s"buckets (${touched.toSeq.sorted.mkString(",")}) or changed " +
+        "the bucket layout — cannot rebase; retry the merge against " +
+        "the new snapshot")
+
+  /** A compaction rebases iff the interleaved commits only ADDED files
+    * (appends): every file it read is still in the new head. Anything that
+    * replaced files (merge, overwrite, another compact) aborts.
+    */
+  private[sources] def compactRebase(table: String, base: Manifest): Manifest => Option[String] = {
+    val basePaths = base.files.map(_.path).toSet
+    lm => if (lm.numBuckets == base.numBuckets && basePaths.subsetOf(lm.files.map(_.path).toSet)) None
+      else Some(s"vparquet: a concurrent commit replaced files of $table while it " +
+        "was being compacted — re-run the compaction against the new snapshot")
   }
 
   /** Claim version `v` atomically. The manifest is FULLY WRITTEN to a temp
@@ -402,13 +465,10 @@ object VParquet {
     val schema =
       if (overwrite || prevManifest.isEmpty) schemaJsonOf(df)
       else reconcileSchema(prevManifest.get.schemaJson, df, mergeSchema, table)
-    val version = prev.map(_ + 1).getOrElse(0L)
-    val (seen, seenOk) = nextTxnSeen(spark, table, prevManifest, txn, txnAppId)
-    writeManifest(spark, table, Manifest(version,
-      if (overwrite) "overwrite" else "append",
-      System.currentTimeMillis(), nb, carry ++ newFiles, keyCols, txn, txnAppId,
-      schema, seen, seenOk))
-    version
+    commit(spark, table, prevManifest, txn, txnAppId, rebase = None) { _ =>
+      Manifest(0L, if (overwrite) "overwrite" else "append", System.currentTimeMillis(),
+        nb, carry ++ newFiles, keyCols, txn, txnAppId, schema)
+    }
   }
 
   /** Keyed upsert commit. Without `numBuckets`: read-all, anti-join,
@@ -433,15 +493,15 @@ object VParquet {
         s"vparquet: $table is bucketed with numBuckets=${m.numBuckets}; " +
           s"cannot merge with numBuckets=$n (rows would be located in the wrong bucket)")
     }
-    val deduped = graft.streaming.UpsertParquet
-      .newestPerKey(batch.toDF(), idCols, orderCol)
+    val deduped = newestPerKey(batch.toDF(), idCols, orderCol)
     // An empty batch must not commit an empty (unreadable) first snapshot;
     // it is a no-op: the current version on an existing table, -1 (nothing
     // committed) on a brand-new one — important for streams whose first
     // micro-batch is empty. The bucketed path detects this from the
     // touched-bucket collect it needs anyway (no extra Spark job).
-    val version = prev.map(_ + 1).getOrElse(0L)
-
+    val oldFiles = current.map(_.files).getOrElse(Seq.empty)
+    def mergeManifest(nb: Int, files: Seq[FileEntry]) = Manifest(0L, "merge",
+      System.currentTimeMillis(), nb, files, idCols, txn, txnAppId, schemaJsonOf(deduped))
     numBuckets match {
       case Some(n) =>
         val bucketOf = pmod(xxhash64(idCols.map(col): _*), lit(n)).cast("int")
@@ -450,10 +510,7 @@ object VParquet {
           val touched = batchB.select("__bucket__").distinct()
             .collect().map(_.getInt(0)).toSet
           if (touched.isEmpty) return prev.getOrElse(-1L)
-          val oldFiles = current.map(_.files).getOrElse(Seq.empty)
-          // unbucketed (-1) files can hold any key → always in scope
-          val (inScope, carry) = oldFiles.partition(f =>
-            f.bucket < 0 || touched.contains(f.bucket))
+          val inScope = oldFiles.filter(inBuckets(touched))
           val merged =
             if (inScope.isEmpty) batchB
             else spark.read.parquet(absFiles(table, inScope): _*)
@@ -465,65 +522,54 @@ object VParquet {
           val newFiles = writeData(
             merged.repartition(math.max(1, touched.size), col("__bucket__")),
             table, bucketed = true)
-          // Optimistic-concurrency commit: losing the version claim to
-          // another writer is recoverable IFF the interleaved commits left
-          // every file this merge READ (its in-scope buckets + unbucketed
-          // files) untouched — then the rewritten output is still valid and
-          // the commit REBASES onto the new head: same data files, new
-          // carry set, next version. Writers on disjoint buckets therefore
-          // both commit (multi-writer CDC sharded by key range); writers
-          // overlapping in scope still get the loud single-writer error.
-          var v = version
-          var carryNow = carry
-          // the ledger must rebase too: a concurrent commit may have
-          // advanced other writers' markers past what `current` carried
-          var seenNow = nextTxnSeen(spark, table, current, txn, txnAppId)
-          var attempts = 0
-          while (true) {
-            try {
-              writeManifest(spark, table, Manifest(v, "merge",
-                System.currentTimeMillis(), n, carryNow ++ newFiles, idCols, txn, txnAppId,
-                schemaJsonOf(deduped), seenNow._1, seenNow._2))
-              return v
-            } catch {
-              case e: ConcurrentWriteException =>
-                attempts += 1
-                if (attempts > 8) throw e
-                val latest = latestVersion(spark, table).getOrElse(throw e)
-                val lm = readManifest(spark, table, latest)
-                if (alreadyCommittedAnyVersion(spark, table, txn, txnAppId))
-                  return latest
-                val lmInScope = lm.files.filter(f =>
-                  f.bucket < 0 || touched.contains(f.bucket))
-                if (lm.numBuckets != n || lmInScope.toSet != inScope.toSet)
-                  throw new ConcurrentWriteException(
-                    s"vparquet: concurrent write on $table touched this merge's " +
-                      s"buckets (${touched.toSeq.sorted.mkString(",")}) or changed " +
-                      "the bucket layout — cannot rebase; retry the merge against " +
-                      "the new snapshot", e)
-                carryNow = lm.files.filterNot(f =>
-                  f.bucket < 0 || touched.contains(f.bucket))
-                seenNow = nextTxnSeen(spark, table, Some(lm), txn, txnAppId)
-                v = latest + 1
-            }
+          // the head's files outside this merge's scope are carried forward
+          // by reference — also after a rebase onto a newer head
+          commit(spark, table, current, txn, txnAppId,
+            Some(mergeRebase(table, n, touched, inScope))) { h =>
+            mergeManifest(n, h.map(_.files).getOrElse(Seq.empty)
+              .filterNot(inBuckets(touched)) ++ newFiles)
           }
         } finally batchB.unpersist()
       case None =>
         if (deduped.isEmpty) return prev.getOrElse(-1L)
-        val oldFiles = current.map(_.files).getOrElse(Seq.empty)
         val merged =
           if (oldFiles.isEmpty) deduped
           else spark.read.parquet(absFiles(table, oldFiles): _*)
             .join(deduped.select(idCols.map(col): _*), idCols, "left_anti")
             .unionByName(deduped)
         val newFiles = writeData(merged, table, bucketed = false)
-        val (seen, seenOk) = nextTxnSeen(spark, table, current, txn, txnAppId)
-        writeManifest(spark, table, Manifest(version, "merge",
-          System.currentTimeMillis(), -1, newFiles, idCols, txn, txnAppId,
-          schemaJsonOf(deduped), seen, seenOk))
+        commit(spark, table, current, txn, txnAppId, rebase = None)(_ =>
+          mergeManifest(-1, newFiles))
     }
-    version
   }
+
+  /** Within-batch winner per key: by `orderCol` descending when given
+    * (e.g. a binlog offset / event timestamp — the reliable CDC ordering);
+    * without it, falls back to monotonically_increasing_id, which orders
+    * by Spark partition index — fine for single-partition test batches,
+    * NOT a cross-partition arrival order. Always set orderCol in real CDC.
+    */
+  private def newestPerKey(batch: DataFrame, idCols: Seq[String],
+                           orderCol: Option[String]): DataFrame = {
+    val ord = orderCol.map(col).getOrElse(monotonically_increasing_id())
+    batch
+      .withColumn("__ord__", ord)
+      .withColumn("__max__", max(col("__ord__")).over(
+        org.apache.spark.sql.expressions.Window.partitionBy(idCols.map(col): _*)))
+      .filter(col("__ord__") === col("__max__")).drop("__ord__", "__max__")
+      .dropDuplicates(idCols)
+  }
+
+  /** The bucket count a keyed sink merges with: an explicit numBuckets
+    * wins (a mismatch with the table's recorded layout is a loud error in
+    * the merge); otherwise adopt the table's recorded count, or 64 on a
+    * fresh table.
+    */
+  private[graft] def resolveBuckets(spark: SparkSession, table: String,
+                                    numBuckets: Option[Int]): Int =
+    numBuckets.orElse(latestVersion(spark, table)
+      .map(v => readManifest(spark, table, v).numBuckets)
+      .filter(_ > 0)).getOrElse(64)
 
   /** Rewrite the latest snapshot into ~`targetFileSizeMB`-sized files as a
     * new version (the CDC small-file cure: every merge adds files to the
@@ -579,45 +625,37 @@ object VParquet {
         keep ++ writeData(laid, table, bucketed = false)
       }
 
-    // Optimistic commit: losing the version claim is recoverable iff the
-    // interleaved commits only ADDED files (appends) — every file this
-    // compaction read is still in the head. Then the rewrite is still
-    // valid and rebases: same output, head's extra files carried, next
-    // version (and the head's schema, which may have evolved under
-    // mergeSchema appends). Anything that replaced files (merge,
-    // overwrite, another compact) aborts loudly.
+    // a rebase onto a head that appended files carries those files and the
+    // head's schema (which may have evolved under mergeSchema appends); the
+    // commit also carries the txn ledger, since compact+vacuum deletes the
+    // old manifests the re-delivery walk would otherwise find markers in
     val basePaths = m.files.map(_.path).toSet
-    var v = prev + 1
-    var extra = Seq.empty[FileEntry]
-    var schema = m.schemaJson
-    // carry the txn ledger: compact+vacuum deletes the old manifests the
-    // re-delivery walk would otherwise have found markers in
-    var seen = nextTxnSeen(spark, table, Some(m), None, None)
-    var attempts = 0
-    while (true) {
-      try {
-        writeManifest(spark, table, Manifest(v, "compact",
-          System.currentTimeMillis(), m.numBuckets, newManifestFiles ++ extra,
-          m.keyCols, schemaJson = schema, txnSeen = seen._1, txnSeenOk = seen._2))
-        return v
-      } catch {
-        case e: ConcurrentWriteException =>
-          attempts += 1
-          if (attempts > 8) throw e
-          val latest = latestVersion(spark, table).getOrElse(throw e)
-          val lm = readManifest(spark, table, latest)
-          if (lm.numBuckets != m.numBuckets ||
-              !basePaths.subsetOf(lm.files.map(_.path).toSet))
-            throw new ConcurrentWriteException(
-              s"vparquet: a concurrent commit replaced files of $table while it " +
-                "was being compacted — re-run the compaction against the new snapshot", e)
-          extra = lm.files.filterNot(x => basePaths.contains(x.path))
-          schema = lm.schemaJson.orElse(schema)
-          seen = nextTxnSeen(spark, table, Some(lm), None, None)
-          v = latest + 1
-      }
+    commit(spark, table, Some(m), None, None, Some(compactRebase(table, m))) { h =>
+      val head = h.get
+      Manifest(0L, "compact", System.currentTimeMillis(), m.numBuckets,
+        newManifestFiles ++ head.files.filterNot(x => basePaths.contains(x.path)),
+        m.keyCols, schemaJson = head.schemaJson.orElse(m.schemaJson))
     }
-    -1L // unreachable
+  }
+
+  /** Version `v`'s manifest narrowed to the data files it ADDED over v-1
+    * (sorted by path) — the per-version step of both the batch changes
+    * read and the streaming change feed. None when `v` adds nothing, and
+    * for compact commits: they rewrite files without changing data, and
+    * emitting them would re-deliver the whole table per compaction (Delta
+    * marks these dataChange=false and its source skips them). A vacuumed
+    * v-1 diffs against nothing, so every file of `v` counts as added —
+    * each caller decides whether that start is allowed.
+    */
+  private[sources] def changesOf(spark: SparkSession, table: String, v: Long): Option[Manifest] = {
+    val manifest = readManifest(spark, table, v)
+    if (manifest.op == "compact") return None
+    val prev =
+      if (v == 0) Set.empty[String]
+      else try readManifest(spark, table, v - 1).files.map(_.path).toSet
+      catch { case _: java.io.FileNotFoundException => Set.empty[String] }
+    val added = manifest.files.filterNot(e => prev.contains(e.path)).sortBy(_.path)
+    if (added.isEmpty) None else Some(manifest.copy(files = added))
   }
 
   /** Batch CHANGES read: the rows of data files ADDED in versions
@@ -644,26 +682,10 @@ object VParquet {
       s"vparquet: version ${from - 1} of $table is vacuumed, so the changes " +
         s"of version $from cannot be computed — start from an un-vacuumed " +
         "version, or read a full snapshot via versionAsOf instead")
-    val perVersion = range.flatMap { v =>
-      val manifest = readManifest(spark, table, v)
-      // compact commits rewrite files without changing data — skip, or the
-      // range read re-delivers the whole table per compaction (the
-      // streaming feed applies the same rule)
-      if (manifest.op == "compact") None
-      else {
-        val prev =
-          if (v == 0 || !all.contains(v - 1)) Set.empty[String]
-          else readManifest(spark, table, v - 1).files.map(_.path).toSet
-        val added = manifest.files.filterNot(e => prev.contains(e.path))
-          .sortBy(_.path)
-        if (added.isEmpty) None
-        // stats-pruned scan of just this version's added files: a
-        // filtered change read (e.g. one key range) skips non-matching
-        // files per version
-        else Some(VParquetScan.scan(spark, table, manifest.copy(files = added))
-          .withColumn("_commit_version", lit(v)))
-      }
-    }
+    // stats-pruned scan of just each version's added files: a filtered
+    // change read (e.g. one key range) skips non-matching files per version
+    val perVersion = range.flatMap(v => changesOf(spark, table, v).map(m =>
+      VParquetScan.scan(spark, table, m).withColumn("_commit_version", lit(v))))
     perVersion.reduceOption(_ unionByName _).getOrElse {
       val schema = spark.read.parquet(
         absFiles(table, readManifest(spark, table, all.last).files): _*)
@@ -775,14 +797,10 @@ object VParquet {
     require(missing.isEmpty,
       s"vparquet: cannot restore $table to version $version — ${missing.size} of its " +
         s"data files no longer exist (first: ${missing.headOption.map(_.path).getOrElse("")})")
-    val hm = readManifest(spark, table, head)
-    val seen = nextTxnSeen(spark, table, Some(hm), None, None)
-    val v = head + 1
-    writeManifest(spark, table, Manifest(v, "restore",
-      System.currentTimeMillis(), target.numBuckets, target.files,
-      target.keyCols, schemaJson = target.schemaJson,
-      txnSeen = seen._1, txnSeenOk = seen._2))
-    v
+    commit(spark, table, Some(readManifest(spark, table, head)), None, None, rebase = None) { _ =>
+      Manifest(0L, "restore", System.currentTimeMillis(), target.numBuckets,
+        target.files, target.keyCols, schemaJson = target.schemaJson)
+    }
   }
 
   /** SHALLOW CLONE: create `dst` as a zero-copy snapshot of `src` at
@@ -825,10 +843,10 @@ object VParquet {
     // a fresh table carries NO txn ledger: the clone is a new writer
     // surface, and inheriting the source's re-delivery markers would
     // silently drop the first batches of a stream re-pointed at the clone
-    writeManifest(spark, dst, Manifest(0L, "clone",
-      System.currentTimeMillis(), m.numBuckets, absolute, m.keyCols,
-      schemaJson = m.schemaJson, txnSeenOk = true))
-    0L
+    commit(spark, dst, None, None, None, rebase = None) { _ =>
+      Manifest(0L, "clone", System.currentTimeMillis(), m.numBuckets, absolute,
+        m.keyCols, schemaJson = m.schemaJson)
+    }
   }
 
   def vacuum(spark: SparkSession, table: String, retainVersions: Int): (Int, Int) = {

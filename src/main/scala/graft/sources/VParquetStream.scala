@@ -126,27 +126,10 @@ final class VParquetChangeSource(sqlContext: SQLContext, table: String,
       s"vparquet stream: some versions in [$from, $to] of $table no longer " +
         "exist (vacuumed under the stream) — restart with startingVersion at " +
         "an existing version")
-    val perVersion = all.flatMap { v =>
-      val manifest = VParquet.readManifest(spark, table, v)
-      // a compact commit rewrites every file but changes NO data — emitting
-      // its "added" files would re-deliver the whole table after each
-      // compaction (Delta marks these dataChange=false and its source
-      // skips them; the op tag is our equivalent)
-      if (manifest.op == "compact") None
-      else {
-        val files = manifest.files.map(_.path).toSet
-        val prevFiles =
-          if (v == 0) Set.empty[String]
-          else try VParquet.readManifest(spark, table, v - 1).files.map(_.path).toSet
-          catch { case _: java.io.FileNotFoundException => Set.empty[String] }
-        val added = (files -- prevFiles).toSeq.sorted
-          .map(p => VParquet.entryPath(table, p))
-        if (added.isEmpty) None
-        else Some(spark.read.schema(StructType(schema.dropRight(1)))
-          .parquet(added: _*)
-          .withColumn("_commit_version", lit(v)))
-      }
-    }
+    val perVersion = all.flatMap(v => VParquet.changesOf(spark, table, v).map(m =>
+      spark.read.schema(StructType(schema.dropRight(1)))
+        .parquet(m.files.map(e => VParquet.entryPath(table, e.path)): _*)
+        .withColumn("_commit_version", lit(v))))
     val batch =
       if (perVersion.isEmpty)
         spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), schema)

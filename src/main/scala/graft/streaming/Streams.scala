@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.dsl.ScriptContext
+import graft.sources.VParquet
 
 /** Streaming sources for `load` (reference: LoadAdaptor.scala:72-78,146 —
   * a stream-source format makes the whole script a streaming job; the
@@ -109,6 +110,27 @@ object StreamSources {
   * update) and `checkpointLocation`; `duration` (seconds) sets a
   * ProcessingTime trigger (-1 = continuous availability default);
   * the query is named by `set streamName="..."`.
+  *
+  * The keyed vparquet sink, spelled `vparquet` or `upsertParquet` (the CDC
+  * sink of the reference, MLSQLMultiDelta.scala:33-120), commits each
+  * micro-batch as one atomic vparquet manifest version — a batch reader
+  * mid-stream always sees a complete snapshot (the stream→table→batch
+  * bridge the reference runs through Delta, StreamSubBatchQuerySuite.scala:
+  * 30-45). Read the target back with `load vparquet.`. Options:
+  *  - `idCols="k1[,k2]"`: keyed merge, newest row per key wins (required by
+  *    upsertParquet; without it the vparquet spelling appends);
+  *  - `numBuckets="N"`: the merge rewrites only the hash buckets a batch
+  *    touches. upsertParquet defaults it per batch: an explicit value wins,
+  *    then the table's recorded count, then 64;
+  *  - `orderCol`: picks the newest row per key within a batch;
+  *  - `tableCol`: routes each row into the table named by its value under
+  *    the path ([[UpsertParquet.routeMerge]]; requires idCols);
+  *  - `autoCompactEvery="N"`: every N committed versions, fold the per-batch
+  *    files back down (the small-file decay of every CDC sink), inline in
+  *    the same foreachBatch.
+  * The checkpoint location and batch id are recorded in each commit, so an
+  * at-least-once re-delivery is recognized and skipped: exactly-once end
+  * to end.
   */
 object StreamSinks {
 
@@ -156,108 +178,48 @@ object StreamSinks {
           if (jdbcOpts.contains("idCol")) graft.sources.JdbcUpsert.upsert(batch.toDF(), jdbcOpts)
           else batch.write.format("jdbc").mode("append").options(jdbcOpts).save()
         }.start()
-      case "upsertparquet" =>
-        // CDC-style keyed upsert (reference: MLSQLMultiDelta.scala:33-120 —
-        // foreachBatch routing rows into a Delta MERGE by idCols). Two
-        // merge layouts:
-        //  - default: delegate to the transactional vparquet MERGE
-        //    (manifest-committed snapshots, exactly-once via the batchId
-        //    txn marker, time travel). numBuckets defaults to 64 so each
-        //    micro-batch rewrites only the hash buckets its keys touch —
-        //    O(|batch| × table/N) per batch, never O(table). Read the
-        //    target back with `load vparquet.`path`` (same relationship the
-        //    reference has between its CDC sink and `load delta.`).
-        //  - layout="plain": bucket-partitioned bare-parquet directory
-        //    (readable by any plain `spark.read.parquet`); requires
-        //    numBuckets because the unbucketed variant of this layout was
-        //    an O(table)-per-batch read-modify-swap — a scale-killer with
-        //    a non-atomic commit, deliberately not offered.
-        val idCols = opts.getOrElse("idCols",
-          throw new IllegalArgumentException("upsertParquet requires idCols=\"k1[,k2]\""))
-          .split(",").map(_.trim).toSeq
+      case "upsertparquet" | "vparquet" =>
+        // the two spellings differ only in the defaults resolved here
+        opts.get("layout").foreach { l =>
+          throw new IllegalArgumentException(s"$format layout=\"$l\" is not supported — " +
+            "omit layout; the target is a transactional vparquet table, read it " +
+            "back with `load vparquet.`")
+        }
+        val upsert = fmt == "upsertparquet"
+        val idCols = opts.get("idCols").map(_.split(",").map(_.trim).toSeq)
+        if (upsert && idCols.isEmpty)
+          throw new IllegalArgumentException("upsertParquet requires idCols=\"k1[,k2]\"")
+        val tableCol = opts.get("tableCol")
+        if (tableCol.isDefined && idCols.isEmpty)
+          throw new IllegalArgumentException(s"$format tableCol requires idCols=\"k1[,k2]\"")
         val target = ctx.resolvePath(path)
         val orderCol = opts.get("orderCol")
         val numBuckets = opts.get("numBuckets").map(_.toInt)
-        opts.getOrElse("layout", "vparquet").toLowerCase match {
-          case "plain" =>
-            val n = numBuckets.getOrElse(throw new IllegalArgumentException(
-              "upsertParquet layout=\"plain\" requires numBuckets=\"N\" — the " +
-                "unbucketed plain layout rewrites the whole table per batch; " +
-                "omit layout to get the transactional vparquet merge instead"))
-            w2.foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-              UpsertParquet.mergeBucketed(batch, target, idCols, n, orderCol)
-            }.start()
-          case "vparquet" =>
-            // txn is scoped by the checkpoint location: batch ids restart
-            // at 0 per query, so the writer identity must be part of the
-            // idempotence key (Delta's txnAppId/txnVersion contract)
-            val appId = ctx.resolvePath(checkpoint)
-            opts.get("tableCol") match {
-              case Some(tc) =>
-                // multi-table routing: `path` is a base directory and each
-                // row's tableCol value picks the vparquet table under it
-                w2.foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-                  UpsertParquet.routeMerge(batch.toDF(), target, tc, idCols,
-                    numBuckets, orderCol, batchId, appId)
-                }.start()
-              case None =>
-                w2.foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-                  // bucket-count default, resolved per batch: an explicit
-                  // numBuckets wins (a mismatch with the table's recorded
-                  // layout is a loud error in the merge); otherwise adopt the
-                  // existing table's bucket count, or 64 on a fresh table
-                  val spark = batch.sparkSession
-                  val n = UpsertParquet.resolveBuckets(spark, target, numBuckets)
-                  graft.sources.VParquet.merge(batch.toDF(), target, idCols, Some(n),
-                    orderCol, txn = Some(batchId), txnAppId = Some(appId))
-                  ()
-                }.start()
-            }
-          case other => throw new IllegalArgumentException(
-            s"upsertParquet layout must be vparquet|plain, got '$other'")
-        }
-      case "vparquet" =>
-        // transactional analog of the upsertParquet sink: each micro-batch
-        // is one atomic manifest commit (merge when idCols given, append
-        // otherwise), so a batch reader mid-stream always sees a complete
-        // snapshot — the stream→table→batch bridge the reference runs
-        // through Delta (StreamSubBatchQuerySuite.scala:30-45)
-        val target = ctx.resolvePath(path)
-        val mergeKeys = opts.get("idCols").map(_.split(",").map(_.trim).toSeq)
-        val orderC = opts.get("orderCol")
-        val nBuckets = opts.get("numBuckets").map(_.toInt)
-        // (checkpoint, batchId) is recorded in each committed manifest so
-        // an at-least-once re-delivery (crash between manifest commit and
-        // checkpoint offset commit) is recognized and skipped — the sink
-        // is exactly-once end to end. The checkpoint scopes the marker:
-        // batch ids restart at 0 for every new query.
-        val appId = Some(ctx.resolvePath(checkpoint))
-        // autoCompactEvery="N": every N committed versions, fold the
-        // accumulated per-batch files back down (merges add files to their
-        // touched buckets forever otherwise — the operational small-file
-        // decay of every CDC sink). Runs inline in foreachBatch, so it
-        // shares the stream's exactly-once commit path; a compact commit
-        // is itself one atomic version.
+        val bucketsOf: org.apache.spark.sql.SparkSession => Option[Int] =
+          if (upsert) spark => Some(VParquet.resolveBuckets(spark, target, numBuckets))
+          else _ => numBuckets
         val compactEvery = opts.get("autoCompactEvery").map(_.toLong)
         require(compactEvery.forall(_ >= 1), "autoCompactEvery must be >= 1")
+        // batch ids restart at 0 per query, so the checkpoint is part of
+        // the idempotence key (Delta's txnAppId/txnVersion contract)
+        val appId = ctx.resolvePath(checkpoint)
         w2.foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          mergeKeys match {
-            case Some(ks) =>
-              graft.sources.VParquet.merge(batch.toDF(), target, ks, nBuckets,
-                orderC, txn = Some(batchId), txnAppId = appId)
-            case None =>
-              graft.sources.VParquet.write(batch.toDF(), target,
-                overwrite = false, txn = Some(batchId), txnAppId = appId)
-          }
           val spark = batch.sparkSession
-          compactEvery.foreach { n =>
-            graft.sources.VParquet.latestVersion(spark, target).foreach { v =>
-              if (v > 0 && (v + 1) % n == 0 &&
-                  graft.sources.VParquet.readManifest(spark, target, v).op != "compact")
-                graft.sources.VParquet.compact(spark, target, targetFileSizeMB = 128)
-            }
+          val targets = (tableCol, idCols) match {
+            case (Some(tc), Some(ks)) => UpsertParquet.routeMerge(batch.toDF(), target, tc, ks,
+              numBuckets, orderCol, batchId, appId)
+            case (None, Some(ks)) =>
+              VParquet.merge(batch.toDF(), target, ks, bucketsOf(spark), orderCol,
+                txn = Some(batchId), txnAppId = Some(appId))
+              Seq(target)
+            case _ =>
+              VParquet.write(batch.toDF(), target, overwrite = false,
+                txn = Some(batchId), txnAppId = Some(appId))
+              Seq(target)
           }
-          ()
+          for (n <- compactEvery; t <- targets; v <- VParquet.latestVersion(spark, t))
+            if (v > 0 && (v + 1) % n == 0 && VParquet.readManifest(spark, t, v).op != "compact")
+              VParquet.compact(spark, t, targetFileSizeMB = 128)
         }.start()
       case f if Set("parquet", "csv", "json", "text", "orc").contains(f) =>
         w2.start(ctx.resolvePath(path))
@@ -268,36 +230,27 @@ object StreamSinks {
   }
 }
 
-/** Keyed parquet upsert used by the `upsertParquet` streaming sink. */
+/** Multi-table routing for the keyed vparquet sink. */
 object UpsertParquet {
-
-  /** Explicit numBuckets wins; otherwise adopt the target table's
-    * recorded bucket count, or 64 on a fresh table.
-    */
-  private[streaming] def resolveBuckets(spark: org.apache.spark.sql.SparkSession,
-                                        target: String,
-                                        numBuckets: Option[Int]): Int =
-    numBuckets.orElse(
-      graft.sources.VParquet.latestVersion(spark, target)
-        .map(v => graft.sources.VParquet.readManifest(spark, target, v).numBuckets)
-        .filter(_ > 0)).getOrElse(64)
 
   /** Multi-table CDC routing (reference: MLSQLMultiDelta.scala:56-120 —
     * one stream's rows fan out into several Delta tables by their
     * db/table columns inside a single foreachBatch). Here each row's
     * `tableCol` value picks a vparquet table under `base`; every routed
     * target gets ONE transactional merge per micro-batch, idempotent per
-    * (target, txnAppId, batchId). A crash between two targets' commits
+    * (target, txnAppId, batchId), with numBuckets resolved per target
+    * ([[VParquet.resolveBuckets]]). A crash between two targets' commits
     * re-delivers the whole batch: the already-committed target sees its
     * txn marker and no-ops while the lagging one catches up — so the
     * sink stays exactly-once PER TABLE even though targets commit
     * sequentially. Route values become directory names and are
     * validated against a conservative charset (no separators, no `..`).
+    * Returns the routed tables' paths.
     */
   def routeMerge(batch: org.apache.spark.sql.DataFrame, base: String,
                  tableCol: String, idCols: Seq[String],
                  numBuckets: Option[Int], orderCol: Option[String],
-                 batchId: Long, appId: String): Unit = {
+                 batchId: Long, appId: String): Seq[String] = {
     import org.apache.spark.sql.functions._
     val spark = batch.sparkSession
     require(batch.columns.contains(tableCol),
@@ -312,117 +265,14 @@ object UpsertParquet {
         require(n.matches("[A-Za-z0-9_][A-Za-z0-9_.-]*"),
           s"tableCol value '$n' is not a safe table name")
       }
-      names.foreach { name =>
+      names.toSeq.map { name =>
         val sub = cached.filter(col(tableCol).cast("string") === name).drop(tableCol)
         val tgt = base.stripSuffix("/") + "/" + name
-        graft.sources.VParquet.merge(sub, tgt, idCols,
-          Some(resolveBuckets(spark, tgt, numBuckets)), orderCol,
+        VParquet.merge(sub, tgt, idCols,
+          Some(VParquet.resolveBuckets(spark, tgt, numBuckets)), orderCol,
           txn = Some(batchId), txnAppId = Some(appId))
+        tgt
       }
     } finally cached.unpersist(false)
-    ()
   }
-
-  /** Bucket-partitioned merge: the target lives as
-    * `target/__bucket__=k/` (k = pmod(xxhash64(keys), n)), and a batch
-    * touches only the partitions its keys hash into — read those with
-    * partition pruning, anti-join + union, overwrite JUST those partitions
-    * via dynamic partition overwrite. Per-batch cost is proportional to
-    * |touched buckets| × bucket size, not table size. Readers see an extra
-    * `__bucket__` column (drop it, or treat it as the physical layout it
-    * is). Not transactional — a crash mid-commit can leave a partition
-    * replaced and another not; Delta MERGE is the transactional upgrade.
-    */
-  def mergeBucketed(batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                    target: String, idCols: Seq[String], numBuckets: Int,
-                    orderCol: Option[String] = None): Unit = {
-    import org.apache.spark.sql.functions._
-    val spark = batch.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(target)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // the bucket count is part of the PHYSICAL layout: rows are located by
-    // pmod(hash, n), so merging with a different n would silently duplicate
-    // keys (old row never read). A marker file pins it; mismatch is a hard
-    // error telling the user to compact/rewrite.
-    val marker = new org.apache.hadoop.fs.Path(target + "/_graft_buckets")
-    if (fs.exists(marker)) {
-      val in = fs.open(marker)
-      val stored = try scala.io.Source.fromInputStream(in).mkString.trim finally in.close()
-      require(stored == numBuckets.toString,
-        s"upsertParquet target $target was written with numBuckets=$stored; " +
-          s"cannot merge with numBuckets=$numBuckets — rewrite the target first")
-    }
-    val bucket = pmod(xxhash64(idCols.map(col): _*), lit(numBuckets)).cast("int")
-    val deduped = newestPerKey(batch.toDF(), idCols, orderCol)
-      .withColumn("__bucket__", bucket)
-      // reused three times per batch (touched-bucket collect, anti-join
-      // probe, union/write) — one computation, not three
-      .persist()
-    try {
-      // fs-based existence probe: a transient READ failure must propagate,
-      // not be mistaken for "table absent" (which would replace every
-      // touched bucket with batch-only rows); an empty/_SUCCESS-only dir
-      // still counts as absent. Also rejects a non-bucketed layout loudly.
-      val current0 =
-        if (hasParquetData(fs, target)) Some(spark.read.parquet(target)) else None
-      current0.foreach(c => require(c.columns.contains("__bucket__"),
-        s"upsertParquet target $target holds a non-bucketed layout; " +
-          "remove numBuckets or rewrite the target"))
-      val merged = current0 match {
-        case None => deduped
-        case Some(current) =>
-          val touched = deduped.select("__bucket__").distinct()
-            .collect().map(_.getInt(0))
-          current.filter(col("__bucket__").isin(touched.map(Integer.valueOf).toSeq: _*))
-            .join(deduped.select(idCols.map(col): _*), idCols, "left_anti")
-            .unionByName(deduped)
-      }
-      // per-writer option (NOT the session conf, which would race with
-      // concurrent foreachBatch sinks on the same session): only the
-      // touched partitions are replaced
-      merged.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__bucket__").parquet(target)
-      if (!fs.exists(marker)) {
-        val out = fs.create(marker, true)
-        try out.write(numBuckets.toString.getBytes("UTF-8")) finally out.close()
-      }
-    } finally deduped.unpersist(false)
-  }
-
-  /** Within-batch winner per key: by `orderCol` descending when given
-    * (e.g. a binlog offset / event timestamp — the reliable CDC ordering);
-    * without it, falls back to monotonically_increasing_id, which orders
-    * by Spark partition index — fine for single-partition test batches,
-    * NOT a cross-partition arrival order. Always set orderCol in real CDC.
-    */
-  private[graft] def newestPerKey(batch: org.apache.spark.sql.DataFrame,
-                                  idCols: Seq[String],
-                                  orderCol: Option[String]): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions._
-    val ord = orderCol.map(col).getOrElse(monotonically_increasing_id())
-    batch
-      .withColumn("__ord__", ord)
-      .withColumn("__max__", max(col("__ord__")).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(idCols.map(col): _*)))
-      .filter(col("__ord__") === col("__max__")).drop("__ord__", "__max__")
-      .dropDuplicates(idCols)
-  }
-
-  /** True iff the dir exists and holds at least one parquet data file —
-    * an fs-level probe, so a transient read error propagates instead of
-    * being mistaken for "table absent" (which would silently truncate the
-    * accumulated upsert target to the current batch).
-    */
-  private def hasParquetData(fs: org.apache.hadoop.fs.FileSystem,
-                             target: String): Boolean = {
-    val tp = new org.apache.hadoop.fs.Path(target)
-    if (!fs.exists(tp)) return false
-    val it = fs.listFiles(tp, /*recursive=*/ true)
-    while (it.hasNext) {
-      if (it.next().getPath.getName.endsWith(".parquet")) return true
-    }
-    false
-  }
-
 }

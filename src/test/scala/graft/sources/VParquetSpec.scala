@@ -343,45 +343,55 @@ class VParquetSpec extends AnyFunSuite {
   }
 
   test("vparquet sink auto-compacts every N versions") {
-    val t = tmp("vp_ac")
-    import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, String, Long)]
-    mem.toDF().toDF("k", "v", "ts").createOrReplaceTempView("ac_stream")
-    mem.addData((1L, "a", 1L))
-    val ctx = ScriptRunner.run(
-      s"""set streamName = "vpac";
-         |save append ac_stream as vparquet.`$t` where mode="append"
-         |  and checkpointLocation="${java.nio.file.Files.createTempDirectory("ck_ac")}"
-         |  and duration="0" and idCols="k" and orderCol="ts"
-         |  and autoCompactEvery="2";""".stripMargin, spark)
-    val q = ctx.streams("vpac")
-    try {
-      q.processAllAvailable()              // v0: merge ((0+1)%2 != 0)
-      mem.addData((2L, "b", 2L))
-      q.processAllAvailable()              // v1: merge -> v2: compact
-      mem.addData((1L, "a2", 3L))
-      q.processAllAvailable()              // v3: merge ((3+1)%2 == 0 -> v4 compact)
-    } finally q.stop()
-    val ops = VParquet.history(spark, t).orderBy("version")
-      .collect().map(_.getString(1)).toSeq
-    assert(ops.count(_ == "compact") >= 1, s"expected compactions in $ops")
-    // content survives compaction; newest row per key wins
-    val cur = VParquet.loadVersion(spark, t, None, None).orderBy("k")
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
-    assert(cur == Seq(1L -> "a2", 2L -> "b"))
-    // change reads SKIP compaction commits (they rewrite files, not data):
-    // no row may carry a compact version's tag
-    import org.apache.spark.sql.functions.col
-    val compactVersions = VParquet.history(spark, t)
-      .filter(col("op") === "compact").collect().map(_.getLong(0)).toSet
-    assert(compactVersions.nonEmpty)
-    val tagged = VParquet.loadChanges(spark, t, 0,
-        VParquet.latestVersion(spark, t).get)
-      .select("_commit_version").distinct().collect().map(_.getLong(0)).toSet
-    assert((tagged intersect compactVersions).isEmpty,
-      s"compact versions $compactVersions leaked into the change feed: $tagged")
+    // one sink arm serves both spellings and tableCol routing, so the
+    // option applies to each (a routed stream compacts its routed table)
+    Seq("vparquet" -> "", "upsertParquet" -> "", "upsertParquet" -> "routed").foreach { case (sink, route) =>
+      val name = s"$sink$route"
+      val base = tmp(s"vp_ac_$name")
+      val t = if (route.isEmpty) base else s"$base/r1"
+      val routeOpt = if (route.isEmpty) "" else "and tableCol=\"tbl\""
+      import spark.implicits._
+      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+      implicit val sqlCtx = spark.sqlContext
+      val mem = MemoryStream[(Long, String, Long)]
+      val src = mem.toDF().toDF("k", "v", "ts")
+      (if (route.isEmpty) src else src.withColumn("tbl", org.apache.spark.sql.functions.lit("r1")))
+        .createOrReplaceTempView(s"ac_stream_$name")
+      mem.addData((1L, "a", 1L))
+      val ctx = ScriptRunner.run(
+        s"""set streamName = "vpac_$name";
+           |save append ac_stream_$name as $sink.`$base` where mode="append"
+           |  and checkpointLocation="${java.nio.file.Files.createTempDirectory("ck_ac")}"
+           |  and duration="0" and idCols="k" and orderCol="ts"
+           |  $routeOpt
+           |  and autoCompactEvery="2";""".stripMargin, spark)
+      val q = ctx.streams(s"vpac_$name")
+      try {
+        q.processAllAvailable()              // v0: merge ((0+1)%2 != 0)
+        mem.addData((2L, "b", 2L))
+        q.processAllAvailable()              // v1: merge -> v2: compact
+        mem.addData((1L, "a2", 3L))
+        q.processAllAvailable()              // v3: merge ((3+1)%2 == 0 -> v4 compact)
+      } finally q.stop()
+      val ops = VParquet.history(spark, t).orderBy("version")
+        .collect().map(_.getString(1)).toSeq
+      assert(ops.count(_ == "compact") >= 1, s"$name: expected compactions in $ops")
+      // content survives compaction; newest row per key wins
+      val cur = VParquet.loadVersion(spark, t, None, None).orderBy("k")
+        .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+      assert(cur == Seq(1L -> "a2", 2L -> "b"))
+      // change reads SKIP compaction commits (they rewrite files, not data):
+      // no row may carry a compact version's tag
+      import org.apache.spark.sql.functions.col
+      val compactVersions = VParquet.history(spark, t)
+        .filter(col("op") === "compact").collect().map(_.getLong(0)).toSet
+      assert(compactVersions.nonEmpty)
+      val tagged = VParquet.loadChanges(spark, t, 0,
+          VParquet.latestVersion(spark, t).get)
+        .select("_commit_version").distinct().collect().map(_.getLong(0)).toSet
+      assert((tagged intersect compactVersions).isEmpty,
+        s"compact versions $compactVersions leaked into the change feed: $tagged")
+    }
   }
 
   test("re-delivery is recognized even when another writer buried the marker") {
@@ -509,6 +519,81 @@ class VParquetSpec extends AnyFunSuite {
     assert(cur.filter($"v" === "A").count() == 5)
     assert(cur.filter($"v" === "B").count() == 5)
     assert(cur.filter($"v" === "seed").count() == 10)
+  }
+
+  test("commit on a stale head rebases only where its rule allows") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{lit, pmod, xxhash64}
+    val probe = spark.range(200)
+      .select($"id".as("k"), pmod(xxhash64($"id"), lit(4)).cast("int").as("b"))
+      .collect().map(r => r.getLong(0) -> r.getInt(1))
+    def keysIn(b: Int) = probe.filter(_._2 == b).map(_._1).take(5).toSeq
+    // a writer's already-written data files: committed to a side table and
+    // referenced by absolute path, as a shallow clone does
+    def filesOf(rows: org.apache.spark.sql.DataFrame, buckets: Option[Int]) = {
+      val side = tmp("vp_side")
+      if (buckets.isDefined) VParquet.merge(rows, side, Seq("k"), buckets, None)
+      else VParquet.write(rows, side, overwrite = true)
+      VParquet.readManifest(spark, side, 0).files
+        .map(e => e.copy(path = VParquet.entryPath(side, e.path)))
+    }
+    val t = tmp("vp_rebase")
+    VParquet.merge((keysIn(2) ++ keysIn(3)).map(k => (k, "seed")).toDF("k", "v"),
+      t, Seq("k"), Some(4), None)
+    val stale = VParquet.readManifest(spark, t, 0)
+    // the winner claims version 1 on bucket 0 while the writers below
+    // still hold version 0 as their head
+    VParquet.merge(keysIn(0).map(k => (k, "A")).toDF("k", "v"), t, Seq("k"), Some(4), None)
+    def mergeOnStale(bucket: Int, label: String, txn: Option[Long] = None,
+                     appId: Option[String] = None): Long = {
+      val touched = Set(bucket)
+      val files = filesOf(keysIn(bucket).map(k => (k, label)).toDF("k", "v"), Some(4))
+      VParquet.commit(spark, t, Some(stale), txn, appId, Some(VParquet.mergeRebase(
+          t, 4, touched, stale.files.filter(f => f.bucket < 0 || touched(f.bucket))))) { h =>
+        VParquet.Manifest(0L, "merge", System.currentTimeMillis(), 4,
+          h.get.files.filterNot(f => f.bucket < 0 || touched(f.bucket)) ++ files,
+          Seq("k"), txn, appId)
+      }
+    }
+    def snapshot(table: String) = VParquet.loadVersion(spark, table, None, None)
+      .groupBy("v").count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    // 1. disjoint buckets: the loser rebases onto the winner as version 2
+    assert(mergeOnStale(1, "B") == 2L)
+    assert(snapshot(t) == Map("seed" -> 10L, "A" -> 5L, "B" -> 5L))
+    // 2. overlapping buckets: bucket 0 changed under the stale head → throws
+    val e = intercept[VParquet.ConcurrentWriteException](mergeOnStale(0, "C"))
+    assert(e.getMessage.contains("cannot rebase"))
+    assert(VParquet.latestVersion(spark, t).contains(2L))
+    // without a rebase rule a lost claim throws the claim error itself
+    val e2 = intercept[VParquet.ConcurrentWriteException] {
+      VParquet.commit(spark, t, Some(stale), None, None, rebase = None)(_ =>
+        VParquet.Manifest(0L, "append", 0L, 4, stale.files))
+    }
+    assert(e2.getMessage.contains("already claimed"))
+    // 3. a writer whose txn the winner already committed returns the winner's version
+    VParquet.merge(Seq((keysIn(1).head, "W")).toDF("k", "v"), t, Seq("k"), Some(4), None,
+      txn = Some(5L), txnAppId = Some("ckW"))
+    assert(mergeOnStale(1, "W", Some(5L), Some("ckW")) == 3L)
+    assert(VParquet.latestVersion(spark, t).contains(3L))
+    // 4. a compaction over an interleaved append rebases and carries the append
+    val c = tmp("vp_rebase_c")
+    VParquet.write(Seq((1L, "x"), (2L, "y")).toDF("k", "v"), c, overwrite = true)
+    val base = VParquet.readManifest(spark, c, 0)
+    VParquet.write(Seq((3L, "z")).toDF("k", "v"), c, overwrite = false)
+    val appended = VParquet.readManifest(spark, c, 1).files.filterNot(base.files.contains)
+    val compacted = filesOf(Seq((1L, "x"), (2L, "y")).toDF("k", "v").coalesce(1), None)
+    val basePaths = base.files.map(_.path).toSet
+    val vc = VParquet.commit(spark, c, Some(base), None, None,
+        Some(VParquet.compactRebase(c, base))) { h =>
+      VParquet.Manifest(0L, "compact", System.currentTimeMillis(), base.numBuckets,
+        compacted ++ h.get.files.filterNot(x => basePaths.contains(x.path)),
+        base.keyCols, schemaJson = h.get.schemaJson)
+    }
+    assert(vc == 2L)
+    assert(VParquet.readManifest(spark, c, 2).files.toSet == (compacted ++ appended).toSet)
+    assert(VParquet.loadVersion(spark, c, None, None).orderBy("k")
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toSeq ==
+      Seq(1L -> "x", 2L -> "y", 3L -> "z"))
   }
 
   test("streaming vparquet sink commits one snapshot per micro-batch (CDC)") {

@@ -232,36 +232,51 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("upsertParquet sink: CDC-style keyed merge, newest row wins") {
-    val target = java.nio.file.Files.createTempDirectory("ups").resolve("t").toString
-    def runBatch(name: String, data: String): Unit = {
-      val ctx = ScriptRunner.run(
-        s"""set streamName = "$name";
-           |set cdc = '''$data''';
-           |load jsonStr.`cdc` as cdc_b;
-           |load mockStream.`cdc_b` as cdc_s;
-           |save append cdc_s as upsertParquet.`$target` where mode="append"
-           |  and idCols="id"
-           |  and checkpointLocation="${java.nio.file.Files.createTempDirectory("ck_u")}";""".stripMargin,
-        spark)
-      val q = ctx.streams(name)
-      q.processAllAvailable(); q.stop()
+    val dir = java.nio.file.Files.createTempDirectory("ups")
+    val target = dir.resolve("t").toString
+    // twin target: the same micro-batches through the vparquet spelling,
+    // with upsertParquet's resolved bucket default spelled out
+    val twin = dir.resolve("twin").toString
+    def runBatch(name: String, data: String): Unit = Seq(
+      name -> s"upsertParquet.`$target` where",
+      s"${name}_twin" -> s"""vparquet.`$twin` where numBuckets="64" and""").foreach {
+      case (stream, sink) =>
+        val ctx = ScriptRunner.run(
+          s"""set streamName = "$stream";
+             |set cdc = '''$data''';
+             |load jsonStr.`cdc` as cdc_b;
+             |load mockStream.`cdc_b` as cdc_s;
+             |save append cdc_s as $sink mode="append"
+             |  and idCols="id"
+             |  and checkpointLocation="${java.nio.file.Files.createTempDirectory("ck_u")}";""".stripMargin,
+          spark)
+        val q = ctx.streams(stream)
+        q.processAllAvailable(); q.stop()
     }
     runBatch("u1", """{"id":1,"v":"a"}
                      |{"id":2,"v":"b"}""".stripMargin)
     runBatch("u2", """{"id":2,"v":"b2"}
                      |{"id":3,"v":"c"}""".stripMargin)
-    // default layout is a transactional vparquet table: read it back
+    // the target is a transactional vparquet table: read it back
     // through the vparquet source, like the reference reads its CDC
     // target through `load delta.`
-    val result = ScriptRunner.runToDF(
-      s"""load vparquet.`$target` as cdc_back;
+    def snap(t: String) = ScriptRunner.runToDF(
+      s"""load vparquet.`$t` as cdc_back;
          |select id, v from cdc_back as out;""".stripMargin, spark)
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    val result = snap(target)
     assert(result == Map(1L -> "a", 2L -> "b2", 3L -> "c"))
     // each micro-batch is one manifest commit; v0 time-travels to pre-u2
     val v0 = graft.sources.VParquet.loadVersion(spark, target, Some(0L), None)
       .collect().map(r => r.getAs[Long]("id") -> r.getAs[String]("v")).toMap
     assert(v0 == Map(1L -> "a", 2L -> "b"))
+    // one write path: the twin holds the same rows from the same commits
+    def commits(t: String) = graft.sources.VParquet.history(spark, t)
+      .orderBy("version").select("op", "num_buckets", "n_files").collect()
+      .map(r => (r.getString(0), r.getInt(1), r.getInt(2))).toSeq
+    assert(snap(twin) == result)
+    assert(commits(twin) == commits(target))
+    assert(commits(target).map(c => (c._1, c._2)) == Seq("merge" -> 64, "merge" -> 64))
   }
 
   test("upsertParquet tableCol: one stream routes into multiple vparquet tables, exactly-once each") {
@@ -310,54 +325,39 @@ class StreamingSpec extends AnyFunSuite {
     assert(err.getMessage.contains("not a safe table name"))
   }
 
-  test("upsertParquet rejects the unbucketed plain layout") {
-    val target = java.nio.file.Files.createTempDirectory("upsp").resolve("t").toString
-    val err = intercept[Exception] {
-      ScriptRunner.run(
-        s"""set streamName = "up_err";
-           |set cdc = '''{"id":1,"v":"a"}''';
-           |load jsonStr.`cdc` as cdce_b;
-           |load mockStream.`cdce_b` as cdce_s;
-           |save append cdce_s as upsertParquet.`$target` where mode="append"
-           |  and idCols="id" and layout="plain"
-           |  and checkpointLocation="${java.nio.file.Files.createTempDirectory("ck_ue")}";""".stripMargin,
-        spark)
+  test("upsertParquet rejects layout=plain and points at the vparquet table") {
+    Seq("", """ and numBuckets="8"""").foreach { buckets =>
+      val target = java.nio.file.Files.createTempDirectory("upsp").resolve("t").toString
+      val err = intercept[IllegalArgumentException] {
+        ScriptRunner.run(
+          s"""set streamName = "up_err";
+             |set cdc = '''{"id":1,"v":"a"}''';
+             |load jsonStr.`cdc` as cdce_b;
+             |load mockStream.`cdce_b` as cdce_s;
+             |save append cdce_s as upsertParquet.`$target` where mode="append"
+             |  and idCols="id" and layout="plain"$buckets
+             |  and checkpointLocation="${java.nio.file.Files.createTempDirectory("ck_ue")}";""".stripMargin,
+          spark)
+      }
+      assert(err.getMessage.contains("omit layout"))
+      assert(err.getMessage.contains("load vparquet"))
+      assert(!new java.io.File(target).exists(), "a rejected sink must write nothing")
     }
-    assert(err.getMessage.contains("requires numBuckets"))
   }
 
-  test("upsertParquet layout=plain numBuckets: only touched bucket partitions are rewritten") {
-    val target = java.nio.file.Files.createTempDirectory("upsb").resolve("t").toString
-    def runBatch(name: String, data: String): Unit = {
-      val ctx = ScriptRunner.run(
-        s"""set streamName = "$name";
-           |set cdc = '''$data''';
-           |load jsonStr.`cdc` as cdcb_b;
-           |load mockStream.`cdcb_b` as cdcb_s;
-           |save append cdcb_s as upsertParquet.`$target` where mode="append"
-           |  and idCols="id" and numBuckets="8" and layout="plain"
-           |  and checkpointLocation="${java.nio.file.Files.createTempDirectory("ck_ub")}";""".stripMargin,
+  test("vparquet sink tableCol without idCols fails loudly") {
+    val err = intercept[IllegalArgumentException] {
+      ScriptRunner.run(
+        s"""set streamName = "tc_err";
+           |set cdc = '''{"tbl":"users","id":1}''';
+           |load jsonStr.`cdc` as tce_b;
+           |load mockStream.`tce_b` as tce_s;
+           |save append tce_s as vparquet.`${java.nio.file.Files.createTempDirectory("tce")}/base`
+           |  where mode="append" and tableCol="tbl"
+           |  and checkpointLocation="${java.nio.file.Files.createTempDirectory("ck_tce")}";""".stripMargin,
         spark)
-      val q = ctx.streams(name)
-      q.processAllAvailable(); q.stop()
     }
-    runBatch("ub1",
-      (1 to 40).map(i => s"""{"id":$i,"v":"a$i"}""").mkString("\n"))
-    // snapshot per-partition file listings, then upsert ONE key
-    def files(): Map[String, Set[String]] =
-      new java.io.File(target).listFiles().filter(_.getName.startsWith("__bucket__="))
-        .map(d => d.getName -> d.listFiles().map(f => f.getName + ":" + f.lastModified()).toSet)
-        .toMap
-    val before = files()
-    assert(before.size > 1, s"expected multiple bucket partitions, got ${before.keys}")
-    runBatch("ub2", """{"id":7,"v":"updated"}""")
-    val after = files()
-    val changed = after.keys.filter(k => before.get(k) != after.get(k))
-    assert(changed.size == 1, s"expected exactly 1 rewritten bucket, got $changed")
-    val result = spark.read.parquet(target)
-    assert(result.count() == 40)
-    assert(result.filter("id = 7").head().getAs[String]("v") == "updated")
-    assert(result.columns.contains("__bucket__"))
+    assert(err.getMessage.contains("tableCol requires idCols"))
   }
 
   test("session_window aggregation over a stream") {
