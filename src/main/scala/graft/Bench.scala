@@ -122,6 +122,13 @@ object Bench {
     }
     EnvSample(load1, mhz, busy, self, System.nanoTime())
   }
+  /** Short sha of the checkout the bench runs from ("unknown" outside git). */
+  private def gitSha(): String = try {
+    val p = new ProcessBuilder("git", "rev-parse", "--short=12", "HEAD").start()
+    val out = new String(p.getInputStream.readAllBytes(), "UTF-8").trim
+    if (p.waitFor() == 0 && out.nonEmpty) out else "unknown"
+  } catch { case scala.util.control.NonFatal(_) => "unknown" }
+
   /** Other-PID CPU cores consumed between two samples (USER_HZ=100). */
   private def otherCores(a: EnvSample, b: EnvSample): Double = {
     val sec = (b.ns - a.ns) / 1e9
@@ -152,6 +159,9 @@ object Bench {
     // localCheckpoint/lshSelfJoin warnings). ERROR keeps the tail quiet so
     // whatever record was printed last survives.
     spark.sparkContext.setLogLevel("ERROR")
+    // stamped into both record heads so a record names the core count and
+    // commit it measured
+    val stamp = s""""cpus":${spark.sparkContext.defaultParallelism},"sha":"${gitSha()}""""
 
     def runOnce(name: String): RunStats = {
       val g0 = gcMillis; val j0 = jitMillis; val c0 = cpuSec
@@ -235,7 +245,7 @@ object Bench {
         }
         (sb.toString, kept)
       }
-      val head = s"""{"metric":"total","value":${num(total)},"unit":"sec","sf":"$sfDir","nq":${done.size},"skipped":$nSkipped,"single":${sing.size},"failed":${shortList(failedL)},"stalls":${shortList(stallsL)},"regressions":${shortList(regsL)},"isolated":$isoJson,"drift":${num(drift)},"drift_alarm":$alarm,"cdrift":${cdrift.map(num).getOrElse("null")},"env":$envJson,"phase":"$phase","queries":{"""
+      val head = s"""{"metric":"total","value":${num(total)},"unit":"sec",$stamp,"sf":"$sfDir","nq":${done.size},"skipped":$nSkipped,"single":${sing.size},"failed":${shortList(failedL)},"stalls":${shortList(stallsL)},"regressions":${shortList(regsL)},"isolated":$isoJson,"drift":${num(drift)},"drift_alarm":$alarm,"cdrift":${cdrift.map(num).getOrElse("null")},"env":$envJson,"phase":"$phase","queries":{"""
       // slowest-first: the headline entries the verdict table reads are by
       // construction the expensive ones, so they always make the cut
       val budget = 950 - head.length - 50
@@ -629,7 +639,7 @@ object Bench {
       // attribution data VERDICT r19 ask #4 calls for
       val envNow = envSample()
       val envFull = s"""{"load1_start":${num(envStart.load1)},"load1_now":${num(envNow.load1)},"mhz_start":${envStart.mhz.round},"mhz_now":${envNow.mhz.round},"other_cores":${num(otherCores(envStart, envNow))}}"""
-      s"""{"metric":"total","value":$total,"unit":"sec","single_n":${singles.size},"queries":${fmt(results, _.toString)},"cold":${fmt(cold, _.toString)},"failed":$failedJson,"stalls":$stallsFullJson,"regressions":$regsFull,"wobbles":$wobblesFullJson,"skipped":$skippedFullJson,"isolated":$isoFull,"gc_ms":${statsMap(_.gcMs.toString)},"jit_ms":${statsMap(_.jitMs.toString)},"codecache_mb":${statsMap(w => num(w.ccMb))},"cpu_s":${statsMap(w => num(w.cpuS))},"load1":${statsMap(w => num(w.load1))},"env":$envFull,"sf":"$sfDir","drift":${num(globalRatio)},"drift_controls":${gate.controlCount},"drift_alarm":${gate.driftAlarm},"cdrift":${gate.canaryRatio.map(num).getOrElse("null")},"cdrift_canaries":${gate.canaryCount},"phase":"$phase"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec",$stamp,"single_n":${singles.size},"queries":${fmt(results, _.toString)},"cold":${fmt(cold, _.toString)},"failed":$failedJson,"stalls":$stallsFullJson,"regressions":$regsFull,"wobbles":$wobblesFullJson,"skipped":$skippedFullJson,"isolated":$isoFull,"gc_ms":${statsMap(_.gcMs.toString)},"jit_ms":${statsMap(_.jitMs.toString)},"codecache_mb":${statsMap(w => num(w.ccMb))},"cpu_s":${statsMap(w => num(w.cpuS))},"load1":${statsMap(w => num(w.load1))},"env":$envFull,"sf":"$sfDir","drift":${num(globalRatio)},"drift_controls":${gate.controlCount},"drift_alarm":${gate.driftAlarm},"cdrift":${gate.canaryRatio.map(num).getOrElse("null")},"cdrift_canaries":${gate.canaryCount},"phase":"$phase"}"""
     }
     def stdoutRecord(regs: Seq[String], isolated: Seq[(String, Double)],
                      phase: String): String =

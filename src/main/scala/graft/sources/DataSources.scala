@@ -59,14 +59,17 @@ object DataSourceRegistry {
   Seq("delta", "es", "mongo", "solr", "hbase", "redis", "carbondata", "crawlersql")
     .foreach(n => register(new UnavailableSource(n)))
 
-  /** Batch load with registry resolution + fallback to the Spark reader. */
+  /** Batch load with registry resolution + fallback to the Spark reader,
+    * which reuses the schema it inferred for an unchanged file set
+    * ([[FileSchemaCache]]).
+    */
   def load(ctx: ScriptContext, format: String, path: String,
            opts: Map[String, String]): DataFrame =
     lookup(format) match {
       case Some(s) => s.load(ctx, path, opts)
       case None =>
-        val reader = ctx.spark.read.format(format).options(opts)
-        if (path.isEmpty) reader.load() else reader.load(ctx.resolvePath(path))
+        FileSchemaCache.load(ctx.spark, format,
+          if (path.isEmpty) path else ctx.resolvePath(path), opts)
     }
 
   /** Batch save with registry resolution + fallback to the Spark writer.

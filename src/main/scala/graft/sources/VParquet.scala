@@ -9,6 +9,7 @@ import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Versioned parquet tables: the offline stand-in for the reference's
   * `delta` source (MLSQLDelta.scala:14-178 — read/write, time travel,
@@ -379,11 +380,29 @@ object VParquet {
   private def absFiles(table: String, files: Seq[FileEntry]): Seq[String] =
     files.map(f => entryPath(table, f.path))
 
+  private def recordedSchema(m: Manifest): Option[StructType] =
+    m.schemaJson.map(j => DataType.fromJson(j).asInstanceOf[StructType])
+
+  /** `m`'s recorded schema; a legacy manifest without one falls back to
+    * footer inference over its files (the only case that runs a footer job).
+    */
+  private[sources] def schemaOf(spark: SparkSession, table: String, m: Manifest): StructType =
+    recordedSchema(m).getOrElse(spark.read.parquet(absFiles(table, m.files): _*).schema)
+
+  /** Read `files` of `m`'s snapshot typed by `m`'s recorded schema, so a
+    * column added by a `mergeSchema` append reads back from the files that
+    * have it (and null from older files) whichever file Spark lists first.
+    * Legacy manifests without a schema infer from `files`.
+    */
+  private def readFiles(spark: SparkSession, table: String, m: Manifest,
+                        files: Seq[FileEntry]): DataFrame =
+    recordedSchema(m).fold(spark.read)(spark.read.schema).parquet(absFiles(table, files): _*)
+
   /** Recorded in the manifest so readers plan without touching any file.
     * Nullable-widened: parquet reads always surface nullable columns.
     */
   private def schemaJsonOf(df: DataFrame): Option[String] =
-    Some(org.apache.spark.sql.types.StructType(
+    Some(StructType(
       df.schema.filterNot(_.name == "__bucket__").map(_.copy(nullable = true))).json)
 
   /** Append-time schema reconciliation (Delta's mergeSchema semantics).
@@ -395,13 +414,12 @@ object VParquet {
     */
   private def reconcileSchema(prevJson: Option[String], df: DataFrame,
                               mergeSchema: Boolean, table: String): Option[String] = {
-    import org.apache.spark.sql.types.StructType
     val next = StructType(df.schema.filterNot(_.name == "__bucket__")
       .map(_.copy(nullable = true)))
     prevJson match {
       case None => Some(next.json) // legacy table without a recorded schema
       case Some(j) =>
-        val prev = org.apache.spark.sql.types.DataType.fromJson(j).asInstanceOf[StructType]
+        val prev = DataType.fromJson(j).asInstanceOf[StructType]
         val prevByName = prev.map(f => f.name -> f).toMap
         next.foreach { f =>
           prevByName.get(f.name).foreach { pf =>
@@ -513,7 +531,7 @@ object VParquet {
           val inScope = oldFiles.filter(inBuckets(touched))
           val merged =
             if (inScope.isEmpty) batchB
-            else spark.read.parquet(absFiles(table, inScope): _*)
+            else readFiles(spark, table, current.get, inScope)
               .withColumn("__bucket__", bucketOf)
               .join(batchB.select(idCols.map(col): _*), idCols, "left_anti")
               .unionByName(batchB)
@@ -534,7 +552,7 @@ object VParquet {
         if (deduped.isEmpty) return prev.getOrElse(-1L)
         val merged =
           if (oldFiles.isEmpty) deduped
-          else spark.read.parquet(absFiles(table, oldFiles): _*)
+          else readFiles(spark, table, current.get, oldFiles)
             .join(deduped.select(idCols.map(col): _*), idCols, "left_anti")
             .unionByName(deduped)
         val newFiles = writeData(merged, table, bucketed = false)
@@ -597,7 +615,7 @@ object VParquet {
       if (m.numBuckets > 0) {
         require(m.keyCols.nonEmpty,
           s"vparquet: $table is bucketed but its manifest records no keyCols; re-merge once to upgrade it")
-        val df = spark.read.parquet(absFiles(table, m.files): _*)
+        val df = readFiles(spark, table, m, m.files)
         val bucketOf = pmod(xxhash64(m.keyCols.map(col): _*), lit(m.numBuckets)).cast("int")
         // one output partition per bucket → one file per bucket dir
         val rebucketed = df.withColumn("__bucket__", bucketOf)
@@ -616,7 +634,7 @@ object VParquet {
           else m.files.partition(e => sizeOf(e) < target / 2)
         if (smallFiles.size <= 1 && zorderBy.isEmpty)
           return prev // nothing to fold — no empty commit
-        val df = spark.read.parquet(absFiles(table, smallFiles): _*)
+        val df = readFiles(spark, table, m, smallFiles)
         val totalBytes = smallFiles.map(sizeOf).sum
         val parts = math.max(1L, (totalBytes + target - 1) / target).toInt
         val laid =
@@ -687,9 +705,8 @@ object VParquet {
     val perVersion = range.flatMap(v => changesOf(spark, table, v).map(m =>
       VParquetScan.scan(spark, table, m).withColumn("_commit_version", lit(v))))
     perVersion.reduceOption(_ unionByName _).getOrElse {
-      val schema = spark.read.parquet(
-        absFiles(table, readManifest(spark, table, all.last).files): _*)
-        .schema.add("_commit_version", "long")
+      val schema = schemaOf(spark, table, readManifest(spark, table, all.last))
+        .add("_commit_version", "long")
       spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
     }
   }

@@ -323,10 +323,7 @@ object VParquetScan {
     * parquet inference over the listed files.
     */
   def scan(spark: SparkSession, table: String, m: VParquet.Manifest): DataFrame = {
-    val schema: StructType = m.schemaJson.map(j =>
-      DataType.fromJson(j).asInstanceOf[StructType]).getOrElse {
-      spark.read.parquet(m.files.map(e => VParquet.entryPath(table, e.path)): _*).schema
-    }
+    val schema = VParquet.schemaOf(spark, table, m)
     val index = new VParquetFileIndex(spark, table, m, schema)
     val relation = HadoopFsRelation(index, new StructType(), schema, None,
       new ParquetFileFormat(), Map.empty)(spark)

@@ -12,4 +12,10 @@ object PlanShim {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** The session's random id (`private[sql]`): keys per-session caches
+    * without holding a reference to the session itself.
+    */
+  def sessionUUID(spark: SparkSession): String =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionUUID
 }

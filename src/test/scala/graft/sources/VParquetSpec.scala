@@ -226,6 +226,28 @@ class VParquetSpec extends AnyFunSuite {
     assert(cur.filter($"k" === 3L).head().getString(1) == "FINAL")
   }
 
+  test("compact keeps a column added by a mergeSchema append (both branches)") {
+    import spark.implicits._
+    // which data file Spark lists first varies per table (random commit
+    // dirs); inferring from it drops `extra` in about half of fresh tables,
+    // so eight tables (even: unbucketed, odd: bucketed) make the check stick
+    (0 until 8).foreach { i =>
+      val t = tmp(s"vp_compact_evolved_$i")
+      val base = (0 until 4).map(k => (k.toLong, s"r$k")).toDF("k", "v")
+      if (i % 2 == 0) VParquet.write(base, t, overwrite = false)
+      else VParquet.merge(base, t, Seq("k"), numBuckets = Some(4), orderCol = None)
+      VParquet.write(Seq((9L, "x", 9)).toDF("k", "v", "extra"), t, overwrite = false,
+        mergeSchema = true)
+      VParquet.compact(spark, t, 128)
+      val m = VParquet.readManifest(spark, t, VParquet.latestVersion(spark, t).get)
+      assert(m.op == "compact", s"table $i")
+      val rows = VParquet.loadVersion(spark, t, None, None)
+        .select("k", "extra").as[(Long, Option[Int])].collect().sortBy(_._1).toSeq
+      assert(rows == (0 until 4).map(k => (k.toLong, None)) :+ (9L -> Some(9)),
+        s"table $i (${if (i % 2 == 0) "unbucketed" else "bucketed"})")
+    }
+  }
+
   test("randomized merge/compact sequences equal the in-memory upsert model") {
     import spark.implicits._
     // seeded model check: any sequence of keyed upsert batches (with an
