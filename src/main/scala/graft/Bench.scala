@@ -44,6 +44,48 @@ object Bench {
     */
   private[graft] val RedefinedQueries = Set.empty[String]
 
+  // explicit ROOT locale: the f"" interpolator is default-locale-dependent
+  // and a comma-decimal locale would emit invalid JSON
+  private[graft] def num(v: Double): String =
+    String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+
+  /** How many of the slowest single-run entries always get stdout room. */
+  private[graft] val SinglesReserved = 6
+
+  /** The compact stdout record's two query objects, packed into `budget`
+    * bytes: swept-warm entries ("queries") and budget-degraded single-run
+    * entries ("singleq"), each slowest-first as `"<short id>":<sec>`
+    * joined by commas. Slowest-first: the headline entries the verdict
+    * table reads are by construction the expensive ones. The
+    * [[SinglesReserved]] slowest singles have their bytes reserved before
+    * the swept entries are packed, so a long sweep cannot crowd every
+    * single out of the record; singles then also take whatever budget the
+    * swept entries leave (they are cold-regime data; their full times are
+    * in the file record's cold:-1 rows).
+    * @return (swept JSON, swept kept, singles JSON, singles kept)
+    */
+  private[graft] def packQueries(swept: Seq[(String, Double)],
+                                 singles: Seq[(String, Double)],
+                                 budget: Int): (String, Int, String, Int) = {
+    def packed(es: Seq[(String, Double)], budget: Int): (String, Int) = {
+      val entries = es.sortBy(-_._2)
+        .map { case (n, v) => s""""${n.split("_").head}":${num(v)}""" }
+      val sb = new StringBuilder
+      var used = 0; var kept = 0
+      for (e <- entries if used + e.length + 1 <= budget) {
+        if (kept > 0) { sb.append(','); used += 1 }
+        sb.append(e); used += e.length; kept += 1
+      }
+      (sb.toString, kept)
+    }
+    val reserved =
+      if (singles.isEmpty) 0
+      else packed(singles.sortBy(-_._2).take(SinglesReserved), budget - 20)._1.length + 20
+    val (sweptJson, sweptKept) = packed(swept, budget - reserved)
+    val (singJson, singKept) = packed(singles, budget - sweptJson.length - 20)
+    (sweptJson, sweptKept, singJson, singKept)
+  }
+
   /** JVM-health counters captured around each timed run, so a warm-time
     * regression can be attributed (GC pause? JIT recompilation storm? code
     * cache full?) instead of guessed at from the bare seconds — the r9
@@ -193,10 +235,6 @@ object Bench {
     // Two consecutive records (swept + amended) fit one 2 KB tail
     // together, so the driver gets a parseable line whichever it prefers.
     // ------------------------------------------------------------------
-    // explicit ROOT locale: the f"" interpolator is default-locale-dependent
-    // and a comma-decimal locale would emit invalid JSON
-    def num(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     // stdout lists are CAPPED at 8 entries (+"…N" marker): a sick sweep
     // with dozens of stall/regression entries must not blow the byte
     // budget — the r04/r05 parsed:null failure mode — exactly when the
@@ -234,26 +272,9 @@ object Bench {
       // this). They print under the separate "singleq" key instead; the
       // swept-warm "queries" object stays comparable round-over-round.
       val (sing, swept) = done.partition(d => singlesSet.contains(d._1))
-      def packed(es: Seq[(String, Double)], budget: Int): (String, Int) = {
-        val entries = es.sortBy(-_._2)
-          .map { case (n, v) => s""""${n.split("_").head}":${num(v)}""" }
-        val sb = new StringBuilder
-        var used = 0; var kept = 0
-        for (e <- entries if used + e.length + 1 <= budget) {
-          if (kept > 0) { sb.append(','); used += 1 }
-          sb.append(e); used += e.length; kept += 1
-        }
-        (sb.toString, kept)
-      }
       val head = s"""{"metric":"total","value":${num(total)},"unit":"sec",$stamp,"sf":"$sfDir","nq":${done.size},"skipped":$nSkipped,"single":${sing.size},"failed":${shortList(failedL)},"stalls":${shortList(stallsL)},"regressions":${shortList(regsL)},"isolated":$isoJson,"drift":${num(drift)},"drift_alarm":$alarm,"cdrift":${cdrift.map(num).getOrElse("null")},"env":$envJson,"phase":"$phase","queries":{"""
-      // slowest-first: the headline entries the verdict table reads are by
-      // construction the expensive ones, so they always make the cut
-      val budget = 950 - head.length - 50
-      val (sweptJson, sweptKept) = packed(swept, budget)
-      // singles get the leftover byte budget (they are second-class data —
-      // cold-regime; their full times are in the file record's cold:-1 rows)
-      val (singJson, singKept) =
-        packed(sing, budget - sweptJson.length - 20)
+      val (sweptJson, sweptKept, singJson, singKept) =
+        packQueries(swept, sing, 950 - head.length - 50)
       s"""$head$sweptJson},"singleq":{$singJson},"qomitted":${done.size - sweptKept - singKept}}"""
     }
 

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation, Row}
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** Storage release for iterative-loop frames built with
@@ -22,6 +22,12 @@ import org.apache.spark.sql.execution.LogicalRDD
   * Safe by construction: only `LogicalRDD` leaves are touched, so calling
   * it on a non-checkpointed frame is a no-op, and unpersisting an RDD is
   * idempotent.
+  *
+  * Round statistics: [[observed]] checkpoints a frame and returns the
+  * aggregates (row count, convergence test, side sums) that its own
+  * materializing job computed, so loops read them without a `count()` /
+  * `isEmpty` / `agg().head()` probe job over the frame they just
+  * checkpointed.
   */
 object LoopFrames {
 
@@ -54,6 +60,39 @@ object LoopFrames {
         if (lastDir.getAndSet(dir) != dir) sc.setCheckpointDir(dir)
         df.checkpoint(true)
     }
+
+  /** The observed form of [[materialize]] / [[checkpoint]]: checkpoint
+    * `df` through `ck` with the aggregate columns `stats` attached by
+    * `Dataset.observe` at the ROOT of the plan being checkpointed, and
+    * return the checkpointed frame together with the observed row (one
+    * field per stat, in order). The statistics ride the checkpoint's own
+    * job as an accumulator, so a loop reads its round counts, convergence
+    * test and side sums without the extra Spark job a `count()` or
+    * `agg().head()` probe over the new frame would launch (2 jobs per
+    * `count()` under AQE; the checkpoint is 1 result job either way).
+    *
+    * Exactly once: the `CollectMetrics` node sits at the root, so it runs
+    * in the checkpoint's RESULT stage. Spark applies a result task's
+    * accumulator update once per partition, even when a task is retried
+    * or speculated, so the observed values equal a plain aggregate of the
+    * frame. Both regimes materialize in one result job: the local
+    * checkpoint's block-caching job, or the reliable checkpoint's file
+    * write (the eager checkpoint runs no separate `count()`).
+    *
+    * An empty frame observes count 0 and sum `null`: wrap sums in
+    * `coalesce`. Each call uses a fresh `Observation` (single-use).
+    */
+  def observed(df: DataFrame, stats: Column*)(ck: DataFrame => DataFrame): (DataFrame, Row) = {
+    val obs = Observation()
+    val frame = ck(df.observe(obs, stats.head, stats.tail: _*))
+    // the metrics reach the Observation through the session's listener
+    // bus after the checkpoint action ends; the bus drops events when its
+    // queue overflows, so the wait is bounded: a lost event fails the loop
+    // loudly instead of hanging it
+    val row = scala.concurrent.Await.result(obs.future,
+      scala.concurrent.duration.Duration(10, "min"))
+    (frame, row)
+  }
 
   /** Free the materialized blocks behind `df` (blocking=false). Call
     * when a loop replaces its previous round's frame; do NOT call on the

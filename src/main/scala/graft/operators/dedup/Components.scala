@@ -61,13 +61,14 @@ object Components {
         // text, long before any data pressure (found by
         // DedupPropertySpec's random-graph cross-check; PageRank uses the
         // same per-iteration truncation for the same reason)
-        val next = propagated.as("x")
+        // the changed-label count rides the checkpoint's own job
+        val (next, stats) = graft.LoopFrames.observed(propagated.as("x")
           .join(propagated.select(col("id").as("label"), col("label").as("ll")).as("y"),
             Seq("label"), "left")
           .select(col("id"), col("prev"),
-            least(col("label"), coalesce(col("ll"), col("label"))).as("label"))
-          .transform(graft.LoopFrames.materialize)
-        changed = next.filter(col("label") =!= col("prev")).count()
+            least(col("label"), coalesce(col("ll"), col("label"))).as("label")),
+          count(when(col("label") =!= col("prev"), 1)))(graft.LoopFrames.materialize)
+        changed = stats.getLong(0)
         graft.LoopFrames.release(ckpt) // RDD-level: Dataset.unpersist no-ops on checkpoints
         ckpt = next
         labels = next.select(col("id"), col("label"))

@@ -80,9 +80,9 @@ object Bfs {
       // LoopFrames.checkpoint, not plain localCheckpoint: settled and
       // layer get UNIONED each hop, and preserved origin constraints on
       // checkpointed frames can crash Union.rewriteConstraints
-      val seed0 = graft.LoopFrames.checkpoint(
+      val (seed0, seedStats) = graft.LoopFrames.observed(
         (if (keys.isEmpty) start else start.withColumn("node", col(label)))
-          .withColumn("dist", lit(0)))
+          .withColumn("dist", lit(0)), count(lit(1)))(graft.LoopFrames.checkpoint)
       val pair = (keys :+ "node").map(col)
       // settled accumulates as a LAZY UNION of the per-hop materialized
       // layers (r20): re-materializing the whole settled set every hop was
@@ -90,7 +90,7 @@ object Bfs {
       // frontier/settled sizes gate BROADCAST of the per-hop join sides
       // (guide §3.1) so the persisted edge table is never re-shuffled.
       var settled = seed0.toDF()
-      var settledCount = seed0.count()
+      var settledCount = seedStats.getLong(0)
       var frontier = seed0.toDF()
       var frontierCount = settledCount
       // undirected two-layer invariant (r21, ADVICE r20): across an
@@ -114,12 +114,12 @@ object Bfs {
              frontierCount + prevCount)
           else (settled.select(pair: _*), settledCount)
         val st = graft.LoopFrames.maybeBroadcast(anti, antiCount)
-        val layer = graft.LoopFrames.checkpoint(
+        val (layer, layerStats) = graft.LoopFrames.observed(
           e.join(fr, "u")
             .select(keys.map(col) :+ col("v").as("node"): _*).distinct()
             .join(st, keys :+ "node", "left_anti")
-            .withColumn("dist", lit(hop)))
-        val layerCount = layer.count()
+            .withColumn("dist", lit(hop)), count(lit(1)))(graft.LoopFrames.checkpoint)
+        val layerCount = layerStats.getLong(0)
         if (layerCount == 0L) graft.LoopFrames.release(layer)
         else settled = settled.unionByName(layer)
         settledCount += layerCount

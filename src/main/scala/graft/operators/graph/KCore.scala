@@ -24,14 +24,14 @@ import org.apache.spark.storage.StorageLevel
   * within-core degrees it returns) is bit-identical to the
   * recompute-everything formulation — same nodes peel in the same
   * rounds. Per-round cost is one join of the persisted edge table
-  * against the (typically broadcast-small) frontier plus a
-  * frontier-incident aggregation and a node-sized degree merge — NOT a
-  * shuffle of all surviving edges. The one cost the frontier join still
+  * against the (typically broadcast-small) frontier plus one aggregation
+  * that merges the frontier-incident decrements into the node-sized
+  * degrees — NOT a shuffle of all surviving edges. The one cost the frontier join still
   * pays is SCANNING the persisted edge table (stale edges of peeled
   * nodes ride along harmlessly — a peeled node never re-enters the
   * frontier), so once the cumulative peel has removed half the nodes
   * alive at the last compaction, the loop COMPACTS the edge table to
-  * the surviving endpoints (two semi-joins, re-persist, old blocks
+  * the surviving endpoints (two semi-joins, one checkpoint, old blocks
   * freed): deep peels that strip most of the graph scan a geometrically
   * shrinking table instead of the original one forever. The alive frame
   * is `localCheckpoint`ed per round with RDD-level release of the
@@ -152,36 +152,58 @@ object KCore {
   }
 
   /** The delta-peel state and steps shared by [[run]] and [[coreness]]
-    * (see the object doc): the persisted mirrored edge table, the
-    * checkpointed (node, deg) `alive` frame — invariant: deg = degree
-    * within the current alive set — its exact count, and the compaction
-    * bookkeeping. Callers own the outer loop and stop rule, and call
-    * [[close]] in a `finally`.
+    * (see the object doc): the mirrored edge table, the checkpointed
+    * (node, deg) `alive` frame — invariant: deg = degree within the
+    * current alive set — and the statistics its checkpoint job observed
+    * (exact alive count, min degree, frontier size at the current level),
+    * plus the compaction bookkeeping. No step runs a count probe of its
+    * own. Callers own the outer loop and stop rule, and call [[close]] in
+    * a `finally`.
     */
   private final class Peel(edges: DataFrame, srcCol: String, dstCol: String,
                            localFinishEdges: Long) {
+    // persisted until the first compaction replaces it by a checkpoint
     private var e = EdgeMirror.mirror(
         edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
           .filter(col("u") =!= col("v")))
       .distinct().persist(StorageLevel.MEMORY_AND_DISK)
+    private var compacted = false
     var alive: DataFrame = _
     // true alive-node count, maintained exactly (ADVICE r16: a clamped
     // estimate let the loop keep paying counts after the graph emptied)
     var aliveCount = 0L
+    // min alive degree (0 when nothing is alive) and |deg < k| at the
+    // level the alive frame was last checkpointed for
+    var minDeg = 0L
+    var below = 0L
     private var nodesAtCompact = 0L
     private var peeledSince = 0L
 
-    /** Initial degrees — the full-degree aggregation happens exactly
-      * ONCE; every later round maintains `deg` by frontier decrements.
-      * True when the whole graph already fits the local finish.
+    /** Checkpoint `df` as the new alive frame, observing its count, Σ deg,
+      * min deg and frontier size at level `k` in the same job; returns Σ deg.
       */
-    def start(): Boolean = {
-      alive = e.groupBy(col("u").as("node"))
-        .agg(count(lit(1)).as("deg")).transform(graft.LoopFrames.materialize)
-      aliveCount = alive.count()
+    private def setAlive(df: DataFrame, k: Int): Long = {
+      val (ck, st) = graft.LoopFrames.observed(df, count(lit(1)),
+        coalesce(sum(col("deg")), lit(0L)), coalesce(min(col("deg")), lit(0L)),
+        count(when(col("deg") < k, 1)))(graft.LoopFrames.materialize)
+      alive = ck
+      aliveCount = st.getLong(0)
+      minDeg = st.getLong(2)
+      below = st.getLong(3)
+      st.getLong(1)
+    }
+
+    /** Initial degrees at level `k` — the full-degree aggregation happens
+      * exactly ONCE; every later round maintains `deg` by frontier
+      * decrements. Σ deg is the mirrored edge count. True when the whole
+      * graph already fits the local finish.
+      */
+    def start(k: Int): Boolean = {
+      val edgeCount = setAlive(e.groupBy(col("u").as("node"))
+        .agg(count(lit(1)).as("deg")), k)
       nodesAtCompact = aliveCount
       localFinishEdges > 0L && aliveCount <= localFinishEdges &&
-        e.count() <= localFinishEdges
+        edgeCount <= localFinishEdges
     }
 
     /** One frontier decrement round at level `k`: `peeled` (the counted
@@ -192,18 +214,19 @@ object KCore {
       // decrements: edges whose u endpoint just peeled, counted per v —
       // only frontier-incident edges are aggregated, and the counted-small
       // frontier is broadcast into the edge join (r20, guide §3.1): the
-      // persisted edge table is never re-shuffled
+      // persisted edge table is never re-shuffled. One aggregation merges
+      // the survivors' degrees with a −1 per decrement edge (one shuffle,
+      // no alive ⋈ dec join); nodes that are not alive only carry −1 rows
+      // and are dropped.
       val dec = e.join(graft.LoopFrames.maybeBroadcast(
           peeled.select(col("node").as("u")), nPeeled), "u")
-        .groupBy(col("v").as("node")).agg(count(lit(1)).as("__dec__"))
-      val next = alive.filter(col("deg") >= k)
-        .join(dec, Seq("node"), "left")
-        .select(col("node"),
-          (col("deg") - coalesce(col("__dec__"), lit(0L))).as("deg"))
-        .transform(graft.LoopFrames.materialize)
-      graft.LoopFrames.release(alive)
-      alive = next
-      aliveCount -= nPeeled
+        .select(col("v").as("node"), lit(-1L).as("deg"), lit(false).as("alive"))
+      val prev = alive
+      setAlive(alive.filter(col("deg") >= k).withColumn("alive", lit(true))
+        .unionByName(dec)
+        .groupBy(col("node")).agg(sum(col("deg")).as("deg"), max(col("alive")).as("alive"))
+        .where(col("alive")).select(col("node"), col("deg")), k)
+      graft.LoopFrames.release(prev)
       peeledSince += nPeeled
       aliveCount > 0 && peeledSince * 2 >= nodesAtCompact && compact()
     }
@@ -213,24 +236,24 @@ object KCore {
       * endpoints. Stale edges are harmless (a peeled node never re-enters
       * the frontier) but scanning them is not free, and a deep peel would
       * otherwise scan the ORIGINAL table every round. Cost = one old-style
-      * round (two semi-joins + re-persist); the table then shrinks
-      * geometrically. True when the just-counted remnant fits the local
-      * finish.
+      * round (two semi-joins, one observed checkpoint); the table then
+      * shrinks geometrically. True when the just-counted remnant fits the
+      * local finish.
       */
     private def compact(): Boolean = {
-      val compacted = e
+      // materialized (and counted) before the old blocks are dropped
+      val (next, st) = graft.LoopFrames.observed(e
         .join(graft.LoopFrames.maybeBroadcast(
           alive.select(col("node").as("u")), aliveCount), "u")
         .join(graft.LoopFrames.maybeBroadcast(
           alive.select(col("node").as("v")), aliveCount), "v")
-        .select(col("u"), col("v"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val eCount = compacted.count() // materialize before dropping the old blocks
-      e.unpersist(false)
-      e = compacted
+        .select(col("u"), col("v")), count(lit(1)))(graft.LoopFrames.materialize)
+      close()
+      e = next
+      compacted = true
       nodesAtCompact = aliveCount
       peeledSince = 0L
-      localFinishEdges > 0L && eCount <= localFinishEdges &&
+      localFinishEdges > 0L && st.getLong(0) <= localFinishEdges &&
         aliveCount <= localFinishEdges
     }
 
@@ -245,7 +268,8 @@ object KCore {
       out
     }
 
-    def close(): Unit = e.unpersist(false)
+    def close(): Unit =
+      if (compacted) graft.LoopFrames.release(e) else e.unpersist(false)
   }
 
   /** Nodes of the k-core with their within-core degrees: the [[Peel]]
@@ -270,14 +294,14 @@ object KCore {
             (r.adjIdx(i) until r.adjIdx(i + 1)).count(j => inCore(r.adj(j))).toLong)
         }
       }
-      if (p.start()) return finishLocally()
+      if (p.start(k)) return finishLocally()
       var iter = 0
       while (iter < maxIter) {
         // frontier = nodes falling below k under the CURRENT alive set;
-        // derived from the checkpointed alive frame, so the uses below
-        // (count + decrement join) re-run only a cheap filter
+        // its size was observed by the alive frame's checkpoint job, and
+        // the decrement join re-runs only a cheap filter over that frame
         val peeled = p.alive.filter(col("deg") < k)
-        val nPeeled = peeled.count()
+        val nPeeled = p.below
         if (nPeeled == 0L) {
           // fixpoint: nobody peels, so `deg` is the within-core degree
           return p.alive
@@ -296,7 +320,7 @@ object KCore {
       // maxIter rounds means the peel is still stripping layers — a bound
       // set too low (deep-peel graph), not a data error
       throw new IllegalStateException(
-        s"k-core peel did not converge in $maxIter rounds (alive=${p.alive.count()})")
+        s"k-core peel did not converge in $maxIter rounds (alive=${p.aliveCount})")
     } finally p.close()
   }
 
@@ -345,9 +369,9 @@ object KCore {
     require(maxIterPerLevel >= 1, "maxIterPerLevel must be >= 1")
     val p = new Peel(edges, srcCol, dstCol, localFinishEdges)
     try {
-      val small = p.start()
-      var result: Option[DataFrame] = None
       var k = 1
+      val small = p.start(k)
+      var result: Option[DataFrame] = None
       var iter = 0 // rounds spent at the current level
       val outSchema = StructType(Seq(p.alive.schema("node"),
         StructField("coreness", LongType, nullable = false)))
@@ -368,12 +392,10 @@ object KCore {
       // the level-loop exit reads the exact alive count, so the peel never
       // runs no-op levels over an empty alive frame
       while ((maxK == 0 || k <= maxK) && p.aliveCount > 0) {
-        // ONE node-sized aggregation per round: min alive degree (for the
-        // level jump) + frontier size at the current level, one pass
-        val row = p.alive.agg(min(col("deg")).as("m"),
-          count(when(col("deg") < k, 1)).as("below")).head()
-        val minDeg = row.getLong(0)
-        var nPeeled = row.getLong(1)
+        // min alive degree (for the level jump) + frontier size at the
+        // current level: observed by the alive frame's checkpoint job
+        val minDeg = p.minDeg
+        var nPeeled = p.below
         if (nPeeled == 0L) {
           // level fixpoint: every alive node has deg >= minDeg >= k within
           // the alive set, which witnesses the minDeg-core — levels

@@ -38,12 +38,13 @@ object LabelPropagation {
       col(dstCol).cast("long").as("v")).filter(col("u") =!= col("v"))
     val e = graft.operators.graph.EdgeMirror.mirror(e0)
       .distinct().persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = e.select(col("u").as("node")).distinct().transform(graft.LoopFrames.materialize)
+    val (nodes, nodeStats) = graft.LoopFrames.observed(
+      e.select(col("u").as("node")).distinct(), count(lit(1)))(graft.LoopFrames.materialize)
     // counted-small node set → broadcast the label frame into each round's
     // edge join (r20, guide §3.1): the persisted edge table is never
     // re-exchanged/re-sorted per round; the vote counts are unchanged by
     // join strategy. Gated on graft.graph.broadcastNodes.
-    val bcast = graft.LoopFrames.broadcastable(e.sparkSession, nodes.count())
+    val bcast = graft.LoopFrames.broadcastable(e.sparkSession, nodeStats.getLong(0))
     var labels = nodes.withColumn("label", col("node")).transform(graft.LoopFrames.materialize)
     for (_ <- 1 to iterations) {
       val lb = if (bcast) broadcast(labels) else labels

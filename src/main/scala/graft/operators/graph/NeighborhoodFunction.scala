@@ -18,12 +18,16 @@ import org.apache.spark.storage.StorageLevel
   * Built on Spark's native Datasketches HLL functions (`hll_sketch_agg`,
   * `hll_union_agg`, `hll_sketch_estimate`) — map-side partial unions
   * come free from the aggregate, and the union is register-wise max:
-  * commutative, associative, idempotent. The sketch state — and hence
-  * the BIGINT estimate — is therefore independent of merge order,
-  * partitioning, and executor count: a DETERMINISTIC estimate, which is
-  * what makes the persisted (node, hop, nf_est) table a full hash-exact
-  * oracle boundary (the p127 pattern: DuckDB cannot run HLL, but it can
-  * replay every centrality formula downstream of the stamped estimates).
+  * commutative, associative, idempotent. The sketch registers are
+  * therefore independent of merge order, partitioning, and executor
+  * count, and in the coupon (exact) regime so is the BIGINT estimate,
+  * which is what makes the persisted (node, hop, nf_est) table a full
+  * hash-exact oracle boundary (the p127 pattern: DuckDB cannot run HLL,
+  * but it can replay every centrality formula downstream of the stamped
+  * estimates). Past the coupon regime the estimator Datasketches picks
+  * for a union result depends on how the partial unions were grouped,
+  * so HLL-mode estimates can differ between partitionings (seen at
+  * lgK=4: 1 vs 4 shuffle partitions moved hop-1 estimates).
   *
   * Error contract: relative standard error ≈ 1.04/√2^lgK (~1.6% at the
   * default lgK=12); on small graphs the Datasketches HLL runs in exact
@@ -32,11 +36,15 @@ import org.apache.spark.storage.StorageLevel
   * registers), so per-hop deltas are ≥ 0 and the harmonic/closeness
   * sums are well-formed.
   *
-  * Rounds stop early when NO node's estimate changed (a deterministic
-  * data property; sketch registers can in principle grow without moving
-  * any estimate, so pathological graphs could hide a late delta behind a
-  * flat round — within the operator's approximate contract, and `maxHops`
-  * always bounds the loop loudly).
+  * Rounds stop early when NO node's unrounded estimate changed (a
+  * deterministic data property, observed by the job that checkpoints the
+  * round's sketches). A hop can leave every rounded `nf_est` flat while a
+  * sketch still grew; the loop runs on through it, so such a hop appears
+  * as a slice equal to the previous one. Sketch registers can in principle
+  * grow without moving even the unrounded estimate, so pathological graphs
+  * could still hide a late delta behind a flat round — within the
+  * operator's approximate contract, and `maxHops` always bounds the loop
+  * loudly.
   *
   * No reference counterpart; graph-analytics extension per the builder
   * prompt (HyperBall is public literature).
@@ -54,6 +62,14 @@ object NeighborhoodFunction {
     * array); 0 disables the array formulation outright.
     */
   val AdjacencyMaxDegreeKey = "graft.graph.adjMaxDegree"
+
+  /** IEEE bits of a sketch's unrounded estimate (`hll_sketch_estimate`
+    * rounds to BIGINT); as deterministic as the estimate itself (see the
+    * object doc).
+    */
+  private val estimateBits = udf((sketch: Array[Byte]) =>
+    java.lang.Double.doubleToLongBits(
+      org.apache.datasketches.hll.HllSketch.heapify(sketch).getEstimate))
 
   /** Per-node per-hop ball-size estimates: (node, hop, nf_est) for hop
     * 0..maxHops (hop 0 = 1, the node itself; directed balls follow
@@ -99,19 +115,28 @@ object NeighborhoodFunction {
           else Some(graft.LoopFrames.checkpoint(
             e.groupBy(col("v")).agg(collect_list(col("u")).as("us"))))
         }
+      // checkpoint a sketch frame, observing its convergence statistic in
+      // the same job: Σ over nodes of the UNROUNDED estimate's IEEE bits
+      // (exact decimal). Positive doubles order like their bits and each
+      // node's estimate is monotone across hops (the union only grows
+      // registers — scaladoc contract above), so the total is unchanged
+      // iff no estimate moved — including a move too small to change the
+      // rounded BIGINT `nf_est`, which a Σ nf_est test misread as converged.
+      def observedSketches(df: DataFrame): (DataFrame, java.math.BigDecimal) = {
+        val (ck, st) = graft.LoopFrames.observed(df,
+          coalesce(sum(estimateBits(col("sketch")).cast("decimal(38,0)")),
+            lit(java.math.BigDecimal.ZERO).cast("decimal(38,0)")))(
+          graft.LoopFrames.checkpoint)
+        (ck, st.getDecimal(0))
+      }
       // ball state at hop 0: each node's sketch holds just itself
-      var sk = graft.LoopFrames.checkpoint(
+      var (sk, prevSum) = observedSketches(
         nodes.groupBy(col("node"))
           .agg(expr(s"hll_sketch_agg(node, $lgK)").as("sketch")))
       def estimates(s: DataFrame, hop: Int): DataFrame =
         s.select(col("node"), lit(hop).as("hop"),
           expr("hll_sketch_estimate(sketch)").as("nf_est"))
-      def estSum(est: DataFrame): java.math.BigDecimal = {
-        val r = est.agg(sum(col("nf_est").cast("decimal(38,0)"))).head
-        if (r.isNullAt(0)) java.math.BigDecimal.ZERO else r.getDecimal(0)
-      }
       var result = graft.LoopFrames.checkpoint(estimates(sk, 0))
-      var prevSum = estSum(result)
       var hop = 0
       var converged = false
       while (hop < maxHops && !converged) {
@@ -127,16 +152,11 @@ object NeighborhoodFunction {
             e.join(sk.select(col("node").as("v"), col("sketch")), "v")
               .select(col("u").as("node"), col("sketch"))
         }
-        val merged = graft.LoopFrames.checkpoint(
+        val (merged, curSum) = observedSketches(
           sk.select(col("node"), col("sketch")).unionByName(contrib)
             .groupBy(col("node"))
             .agg(expr(s"hll_union_agg(sketch, true)").as("sketch")))
         val est = graft.LoopFrames.checkpoint(estimates(merged, hop))
-        // convergence: estimates are monotone per node across hops (the
-        // union only grows registers — scaladoc contract above), so the
-        // TOTAL is unchanged iff every estimate is unchanged. One tiny
-        // global agg replaces the former per-hop est⋈prevEst join+count.
-        val curSum = estSum(est)
         graft.LoopFrames.release(sk)
         sk = merged
         if (curSum.compareTo(prevSum) == 0) {

@@ -28,19 +28,27 @@ import org.apache.spark.storage.StorageLevel
   * set fits `graft.graph.broadcastNodes` (default 1M rows) the rank frame
   * is BROADCAST into the edge join — the persisted edge table is never
   * re-exchanged or re-sorted, and each iteration's only shuffle is the
-  * node-sized partial-aggregated (dst, share) map output. Above the
+  * node-sized partial-aggregated (dst, share) map output, which the node
+  * rows join by riding the same aggregation. Above the
   * limit, the classic shape: edges pre-partitioned on src + persisted so
   * every iteration reuses one exchange; K iterations = K edge-shuffles,
   * the canonical distributed PageRank cost. Each iteration's rank table is
-  * `localCheckpoint`ed: ranks_k is read three times building
-  * ranks_{k+1} (dangling, inSum, next input), and under plain
-  * persist() the plan tree still NESTS k levels of lineage, so
-  * analysis/AQE-replan cost grows with k and dominates past a few
-  * iterations (measured 3.4→4.8 s/iter growth at sf0.1; constant
-  * ~0.5 s after truncation). On a real cluster set
+  * `localCheckpoint`ed: under plain persist() the plan tree still NESTS
+  * k levels of lineage, so analysis/AQE-replan cost grows with k and
+  * dominates past a few iterations (measured 3.4→4.8 s/iter growth at
+  * sf0.1; constant ~0.5 s after truncation). On a real cluster set
   * `graft.checkpoint.dir` to route loop frames to reliable checkpoints
-  * if executor loss matters — the algorithm is oblivious. Dangling mass is a 1-row aggregate broadcast back
-  * in-plan (no driver round-trip beyond job scheduling).
+  * if executor loss matters — the algorithm is oblivious.
+  *
+  * Round statistics are OBSERVED ([[graft.LoopFrames.observed]]), not
+  * probed: the node frame is materialized once with its sink flag, and
+  * its job also yields N (and TrustRank's seed count S) and dm0; the
+  * dangling mass Σ_{sinks} r_k is observed by the job that checkpoints
+  * ranks_k and enters round k+1 as a long LITERAL (exact long algebra,
+  * so a literal and an in-plan aggregate give the same bits). Each
+  * round is therefore one materializing job plus the edge join's own
+  * stages — no sink frame, no `isEmpty`/`count` probe, no per-round
+  * dangling sub-plan.
   *
   * One loop: [[run]], [[runWeighted]] and [[TrustRank.run]] differ only
   * in the per-edge share, the teleport divisor and which nodes receive
@@ -71,12 +79,10 @@ object PageRank {
     // input-sized shuffle here
     val e = (if (edgesDistinct) sel else sel.distinct())
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val (nodes, n) = countedNodes(e)
     val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
     // integral `div`, NOT double `/`+cast: a quotient one ulp under an
     // integer would round up in double and truncate to the wrong floor
-    propagate(e, outdeg, "r div outdeg", nodes, n, n, identity,
-      iterations, unit, "rank")
+    propagate(e, outdeg, "r div outdeg", None, iterations, unit, "rank")
   }
 
   /** Weighted PageRank: a node's rank splits across its out-edges in
@@ -102,48 +108,54 @@ object PageRank {
       .filter(col("w") > 0)
     val e = sel.groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val (nodes, n) = countedNodes(e)
     val swt = e.groupBy(col("src")).agg(sum(col("w")).as("sw"))
-    val maxSw = swt.agg(max(col("sw"))).collect()(0).getLong(0)
+    val mx = swt.agg(max(col("sw"))).head()
+    val maxSw = if (mx.isNullAt(0)) 0L else mx.getLong(0) // null: no edges
     require(maxSw <= 3037000499L, // floor(sqrt(Long.MaxValue))
       s"weighted PageRank: a node carries weight mass $maxSw > sqrt(Long.Max) " +
         "— rescale weights (the exact share split would overflow)")
-    propagate(e, swt, "w * (r div sw) + ((r % sw) * w) div sw", nodes, n, n,
-      identity, iterations, unit, "rank")
-  }
-
-  /** The materialized distinct endpoint set of `e` and its count. */
-  private def countedNodes(e: DataFrame): (DataFrame, Long) = {
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .transform(graft.LoopFrames.materialize)
-    val n = nodes.count()
-    require(n > 0, "PageRank over an empty edge set (no nodes)")
-    (nodes, n)
+    propagate(e, swt, "w * (r div sw) + ((r % sw) * w) div sw", None,
+      iterations, unit, "rank")
   }
 
   /** The one rank-propagation loop behind [[run]], [[runWeighted]] and
     * [[TrustRank.run]] (see the object doc for the recurrence and the
     * two join regimes).
     *
-    * @param e       persisted (src, dst, …) edge table; unpersisted here
-    * @param deg     per-src divisor table joined onto `e` on `src`; a
-    *                node absent from it is a sink
-    * @param share   SQL for one edge's share of `r` over the joined row
-    * @param nodes   materialized node frame (`node` first, plus any
-    *                column `onSeeds` reads); released here
-    * @param n       counted row count of `nodes` (broadcast gate)
-    * @param divisor N for PageRank, the seed count S for TrustRank
-    * @param onSeeds confines a SQL term to the teleport targets:
-    *                identity for PageRank, `CASE WHEN is_seed …` for
-    *                TrustRank — applied to r0, the teleport term and the
-    *                dangling share
+    * @param e     persisted (src, dst, …) edge table; unpersisted here
+    * @param deg   per-src divisor table joined onto `e` on `src`, one row
+    *              per src of `e` (a node that is no src is a sink)
+    * @param share SQL for one edge's share of `r` over the joined row
+    * @param seeds None for PageRank (divisor N, uniform teleport); for
+    *              TrustRank the non-null seed ids as column `node` (divisor
+    *              S, teleport, r0 and the dangling share confined to seeds)
     * @return (node, `out`_fp, `out`)
     */
   private[graph] def propagate(e: DataFrame, deg: DataFrame, share: String,
-                               nodes: DataFrame, n: Long, divisor: Long,
-                               onSeeds: String => String, iterations: Int,
+                               seeds: Option[DataFrame], iterations: Int,
                                unit: Long, out: String): DataFrame = {
+    // ONE materialization of the node frame with its flags: every endpoint
+    // (and seed) once, `is_sink` = no out-edge (a null id never matches
+    // the src join, so it is always a sink), `is_seed` for TrustRank. Its
+    // job observes N, S and the number of sinks that receive r0.
+    val ends = e.select(col("src").as("node"), lit(true).as("out"), lit(false).as("seed"))
+      .union(e.select(col("dst").as("node"), lit(false).as("out"), lit(false).as("seed")))
+    val flagged = seeds.fold(ends)(s =>
+        ends.union(s.select(col("node"), lit(false).as("out"), lit(true).as("seed"))))
+      .groupBy(col("node"))
+      .agg(max(col("out")).as("out"), max(col("seed")).as("is_seed"))
+      .select(col("node"), (col("node").isNull || !col("out")).as("is_sink"),
+        col("is_seed"))
+    val onSeeds: String => String =
+      if (seeds.isEmpty) identity else t => s"CASE WHEN is_seed THEN $t ELSE 0L END"
+    val (nodes, counts) = graft.LoopFrames.observed(flagged,
+      count(lit(1)), count(when(col("is_seed"), 1)),
+      coalesce(sum(expr(s"CASE WHEN is_sink THEN ${onSeeds("1L")} ELSE 0L END")), lit(0L)))(
+      graft.LoopFrames.materialize)
+    val n = counts.getLong(0)
+    require(n > 0, "PageRank over an empty edge set (no nodes)")
+    val divisor = if (seeds.isEmpty) n else counts.getLong(1)
+    require(divisor > 0, "TrustRank needs a non-empty seed set")
     // counted-small node set → broadcast the rank frame into each round's
     // edge join (guide §3.1): the per-round exchange+sort of the edge
     // table disappears; join strategy cannot change the exact integer
@@ -158,42 +170,47 @@ object PageRank {
                     else e.join(deg, "src").repartition(col("src")))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val base = (15L * unit) / (100L * divisor)
-    // iteration-invariant sink set (nodes with no out-edges); when it is
-    // EMPTY (every undirected graph) dm is identically 0, so the per-round
-    // dangling aggregation job is skipped outright — same exact algebra
-    val ids = nodes.select(col("node"))
-    val sinks = ids.join(deg, ids("node") === deg("src"), "left_anti")
-      .transform(graft.LoopFrames.materialize)
-    val haveSinks = !sinks.isEmpty
-    val dangling = if (haveSinks) s" + ${onSeeds(s"dm div ${divisor}L")}" else ""
-    val next = expr(s"${onSeeds(s"${base}L")} + " +
-      s"(85 * (coalesce(insum, 0L)$dangling)) div 100").as("r")
-    var ranks = nodes.select(col("node"), expr(onSeeds(s"${unit / divisor}L")).as("r"))
-      .transform(graft.LoopFrames.materialize)
-    for (_ <- 1 to iterations) {
+    val r0 = unit / divisor
+    // r0 is a projection of the node frame, not a materialization of its
+    // own; the dangling mass Σ_{sinks} r is exact long algebra, so it
+    // enters each round as a literal: dm0 = (sinks receiving r0) · r0,
+    // dm_k is observed by the job that checkpoints ranks_k
+    var ranks = nodes.select(col("node"), col("is_sink"), expr(onSeeds(s"${r0}L")).as("r"))
+    var dm = counts.getLong(2) * r0
+    for (k <- 1 to iterations) {
       val rk = if (bcast) broadcast(ranks) else ranks
-      val inSum = edgesDeg
+      // ONE aggregation per round: every edge's share and every node's own
+      // row meet on `node`, so the in-sum needs no node ⋈ inSum join (one
+      // shuffle, not two). A share into a null dst has no node row to land
+      // on and is dropped, as the join dropped it.
+      val shares = edgesDeg
         .join(rk, edgesDeg("src") === rk("node"))
-        .select(col("dst"), expr(share).as("share"))
-        .groupBy(col("dst")).agg(sum(col("share")).as("insum"))
+        .where(col("dst").isNotNull)
+        .select(col("dst").as("node"), lit(null).cast("boolean").as("is_sink"),
+          lit(null).cast("boolean").as("is_seed"), expr(share).as("share"))
       val prev = ranks
-      val merged = nodes.join(inSum, nodes("node") === inSum("dst"), "left")
-      ranks = (if (haveSinks) {
-          val dm = ranks.join(sinks, "node", "left_semi")
-            .agg(coalesce(sum(col("r")), lit(0L)).as("dm"))
-          merged.crossJoin(broadcast(dm))
-        } else merged)
-        .select(col("node"), next)
-        .transform(graft.LoopFrames.materialize) // eager: materialize + truncate lineage
+      // integral dm div divisor (dm >= 0): Scala `/` is SQL `div` here
+      val next = expr(s"${onSeeds(s"${base}L")} + " +
+        s"(85 * (coalesce(insum, 0L) + ${onSeeds(s"${dm / divisor}L")})) div 100").as("r")
+      val (ck, stats) = graft.LoopFrames.observed(
+        nodes.withColumn("share", lit(null).cast("long")).unionByName(shares)
+          .groupBy(col("node"))
+          .agg(max(col("is_sink")).as("is_sink"), max(col("is_seed")).as("is_seed"),
+            sum(col("share")).as("insum"))
+          .select(col("node"), col("is_sink"), next),
+        coalesce(sum(when(col("is_sink"), col("r"))), lit(0L)))(
+        graft.LoopFrames.materialize) // eager: materialize + truncate lineage
+      ranks = ck
+      dm = stats.getLong(0)
       // RDD-level release: Dataset.unpersist no-ops on checkpoint blocks
-      graft.LoopFrames.release(prev)
+      // (round 1's input is r0, a projection of the live node frame)
+      if (k > 1) graft.LoopFrames.release(prev)
     }
     // the result is the final eager checkpoint — the iteration-invariant
     // frames can be freed now rather than waiting on the ContextCleaner
     e.unpersist(false)
     edgesDeg.unpersist(false)
     graft.LoopFrames.release(nodes)
-    graft.LoopFrames.release(sinks)
     ranks.select(col("node"), col("r").as(s"${out}_fp"),
       (col("r").cast("double") / unit.toDouble).as(out))
   }

@@ -68,12 +68,13 @@ object Sssp {
           "negative edges under cycles have no shortest path")
       // LoopFrames.checkpoint (not plain localCheckpoint): dist unions a
       // checkpointed improvement frame each round — see Bfs
-      var dist = graft.LoopFrames.checkpoint(
+      val (dist0, seedStats) = graft.LoopFrames.observed(
         seeds.select(col(seedCol).as("node"))
           .where(col("node").isNotNull).distinct()
-          .withColumn("dist", lit(0L)))
+          .withColumn("dist", lit(0L)), count(lit(1)))(graft.LoopFrames.checkpoint)
+      var dist = dist0
       var frontier = dist
-      var frontierCount = dist.count()
+      var frontierCount = seedStats.getLong(0)
       var iter = 0
       while (iter < maxIter) {
         iter += 1
@@ -86,12 +87,13 @@ object Sssp {
             frontier.select(col("node").as("u"), col("dist")), frontierCount), "u")
           .select(col("v").as("node"), (col("dist") + col("w")).as("nd"))
           .groupBy("node").agg(min(col("nd")).as("nd"))
-        val improved = graft.LoopFrames.checkpoint(
+        val (improved, improvedStats) = graft.LoopFrames.observed(
           cand.join(dist.select(col("node"), col("dist").as("__old__")),
               Seq("node"), "left")
             .filter(col("__old__").isNull || col("nd") < col("__old__"))
-            .select(col("node"), col("nd").as("dist")))
-        val improvedCount = improved.count()
+            .select(col("node"), col("nd").as("dist")), count(lit(1)))(
+          graft.LoopFrames.checkpoint)
+        val improvedCount = improvedStats.getLong(0)
         if (improvedCount == 0L) {
           graft.LoopFrames.release(improved)
           if (frontier ne dist) graft.LoopFrames.release(frontier)

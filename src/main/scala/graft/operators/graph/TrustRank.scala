@@ -27,8 +27,10 @@ import org.apache.spark.storage.StorageLevel
   * Runs on [[PageRank.propagate]], the one rank-propagation loop it
   * shares with [[PageRank]] (same join regimes, per-round checkpoints
   * and releases), with divisor S and every seed-dependent term gated on
-  * `is_seed`. The seed count is one driver-side count on the (small,
-  * caller-curated) seed set.
+  * `is_seed`. The seed flag, the seed count S and the dangling mass are
+  * observed statistics of the kernel's own checkpoint jobs (the seed set
+  * is unioned into the one node-frame aggregation, not counted apart),
+  * and the dangling mass enters each round as a literal.
   *
   * No reference counterpart; graph/web-curation extension per the
   * builder prompt.
@@ -48,28 +50,12 @@ object TrustRank {
     val sel = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
     val e = (if (edgesDistinct) sel else sel.distinct())
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // null seeds are meaningless (they'd mint a null NODE via the union
-    // below and silently soak teleport mass) — drop, don't propagate
-    // constraint-free checkpoint: seedSet feeds the nodes UNION below
-    val seedSet = graft.LoopFrames.checkpoint(
-      seeds.select(col(seedCol).as("node"))
-        .where(col("node").isNotNull).distinct())
-    val s = seedSet.count()
-    require(s > 0, "TrustRank needs a non-empty seed set")
-    // the per-node seed indicator is iteration-invariant: materialize it
-    // ONCE on the node set (r20 — the loop previously re-joined seedSet
-    // every round, twice the per-round join count for the same values)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).union(seedSet.toDF("node"))
-      .distinct()
-      .join(seedSet.withColumn("__seed__", lit(1)), Seq("node"), "left")
-      .select(col("node"), col("__seed__").isNotNull.as("is_seed"))
-      .transform(graft.LoopFrames.materialize)
-    val n = nodes.count()
+    // null seeds are meaningless (they'd mint a null NODE and silently
+    // soak teleport mass) — drop, don't propagate. The seed count S and
+    // the per-node seed flag come from the kernel's one node-frame job.
     val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-    val trust = PageRank.propagate(e, outdeg, "r div outdeg", nodes, n, s,
-      t => s"CASE WHEN is_seed THEN $t ELSE 0L END", iterations, unit, "trust")
-    graft.LoopFrames.release(seedSet)
-    trust
+    PageRank.propagate(e, outdeg, "r div outdeg",
+      Some(seeds.select(col(seedCol).as("node")).where(col("node").isNotNull)),
+      iterations, unit, "trust")
   }
 }

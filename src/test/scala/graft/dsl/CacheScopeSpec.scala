@@ -52,7 +52,10 @@ class CacheScopeSpec extends AnyFunSuite {
 
   test("s26-shaped script leaves zero caches after Engine.run — even 3x in a loop") {
     spark.catalog.clearCache()
-    val baseline = awaitNoNewCached(Set.empty[Int]) // drain stragglers
+    // a snapshot: an RDD cached before the test cannot appear in
+    // `cachedIds -- baseline` (waiting for NO cached RDD in the shared
+    // session ran into the 30 s timeout whenever an earlier suite left one)
+    val baseline = cachedIds
     val base = Files.createTempDirectory("graft-cachescope").toString
     val engine = new Engine(spark, base)
     (1 to 3).foreach { i =>
@@ -82,7 +85,7 @@ class CacheScopeSpec extends AnyFunSuite {
   test("operator caches outside any script keep the single-flight fallback") {
     import org.apache.spark.sql.functions._
     spark.catalog.clearCache()
-    val baseline = awaitNoNoise()
+    val baseline = cachedIds
     val docs = spark.read.parquet(s"$sf/documents.parquet")
       .select(col("doc_id"), col("lang"))
     // two direct calls: the second unpersists the first's ranged frame
@@ -98,12 +101,10 @@ class CacheScopeSpec extends AnyFunSuite {
     spark.catalog.clearCache()
   }
 
-  private def awaitNoNoise(): Set[Int] = awaitNoNewCached(Set.empty[Int])
-
   test("repeat invocation with an identical plan keeps its cache (same-plan guard)") {
     import org.apache.spark.sql.functions._
     spark.catalog.clearCache()
-    val baseline = awaitNoNoise()
+    val baseline = cachedIds
     val docs = spark.read.parquet(s"$sf/documents.parquet")
       .select(col("doc_id"), col("lang"))
     // identical input + params -> CacheManager re-registers the SAME entry;

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.{Gen, Prop, Test => SCTest}
+import org.apache.spark.sql.DataFrame
 
 import graft.TestSpark
 
@@ -61,63 +62,78 @@ class GraphPropertySpec extends AnyFunSuite {
     }, n = 6)
   }
 
-  test("broadcast gate: shuffle regime (broadcastNodes=0) is bit-identical to the broadcast regime") {
-    // the 100 TB fallback path (r21, VERDICT r20 ask #10): every counted-
-    // small loop frame that normally broadcasts must produce the same
-    // rows when the gate forces the classic shuffle join, or the fallback
-    // rots unexercised. PageRank covers the per-round edge join; Bfs
-    // (undirected) additionally covers the two-layer anti-join side. The
-    // other callers of the shared kernels ride the same gates: TrustRank
-    // and weighted PageRank the rank-propagation joins, labeled Bfs the
-    // (seed, node) frontier, and coreness (local finish off) the peel's
-    // frontier and compaction joins.
+  test("execution regimes: broadcast gate, reliable checkpoints and shuffle partitions are bit-identical") {
+    // every loop must produce the same rows whichever way its frames are
+    // joined and materialized: the broadcast gate forced shut (the 100 TB
+    // shuffle-join fallback, r21 / VERDICT r20 ask #10), reliable
+    // checkpoints under graft.checkpoint.dir, and 1 vs 4 shuffle
+    // partitions. PageRank covers the per-round edge join; Bfs (undirected)
+    // additionally covers the two-layer anti-join side; TrustRank and
+    // weighted PageRank the rank-propagation joins, labeled Bfs the (seed,
+    // node) frontier, KCore (local finish off) the peel's frontier and
+    // compaction joins; Sssp, LabelPropagation, NeighborhoodFunction
+    // (coupon-exact sketches at this size) and Components' distributed
+    // doubling loop their observed round statistics. In each regime an
+    // observed count and sum equal a plain count() and sum of the frame.
     import spark.implicits._
+    import org.apache.spark.sql.functions._
     val rnd = new scala.util.Random(23)
     val edges = Seq.fill(200)((rnd.nextInt(40).toLong, rnd.nextInt(40).toLong))
       .filter(p => p._1 != p._2).distinct
+    val e = edges.toDF("s", "d")
     val seeds = (0L to 39L by 5).toDF("n")
-    def both[A](run: => Seq[A]): (Seq[A], Seq[A]) = {
-      val bc = run
-      spark.conf.set(graft.LoopFrames.BroadcastNodesKey, "0")
-      try { (bc, run) } finally spark.conf.unset(graft.LoopFrames.BroadcastNodesKey)
-    }
-    val (prB, prS) = both {
-      graft.operators.graph.PageRank.run(edges.toDF("s", "d"), "s", "d",
-          iterations = 3)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
-    }
-    assert(prB == prS)
-    val (bfB, bfS) = both {
-      graft.operators.graph.Bfs.hopDistance(edges.toDF("s", "d"), "s", "d",
-          seeds, "n", maxHops = 5, undirected = true)
-        .collect().map(r => (r.getLong(0), r.getInt(1))).toSeq.sorted
-    }
-    assert(bfB == bfS)
-    val (trB, trS) = both {
-      graft.operators.graph.TrustRank.run(edges.toDF("s", "d"), "s", "d",
-          seeds, "n", iterations = 3)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
-    }
-    assert(trB == trS)
-    val (wpB, wpS) = both {
-      graft.operators.graph.PageRank.runWeighted(
+    val ckDir = java.nio.file.Files.createTempDirectory("graft-regime-ck").toString
+    val regimes = Seq(
+      "broadcast" -> Map.empty[String, String],
+      "shuffle joins" -> Map(graft.LoopFrames.BroadcastNodesKey -> "0"),
+      "reliable checkpoints" -> Map(graft.LoopFrames.CheckpointDirKey -> ckDir),
+      "1 shuffle partition" -> Map("spark.sql.shuffle.partitions" -> "1"),
+      "4 shuffle partitions" -> Map("spark.sql.shuffle.partitions" -> "4"))
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+    def runAll(): Map[String, Seq[String]] = {
+      val (ck, st) = graft.LoopFrames.observed(
+        e.groupBy($"s").agg(count(lit(1)).as("c")),
+        count(lit(1)), coalesce(sum($"c"), lit(0L)))(graft.LoopFrames.checkpoint)
+      assert(st.getLong(0) == ck.count())
+      assert(st.getLong(1) == ck.agg(sum($"c")).head().getLong(0))
+      graft.LoopFrames.release(ck)
+      val (empty, est) = graft.LoopFrames.observed(e.where($"s" < 0),
+        count(lit(1)), coalesce(sum($"d"), lit(0L)))(graft.LoopFrames.materialize)
+      assert(est.getLong(0) == 0L && est.getLong(1) == 0L && empty.count() == 0L)
+      Map(
+        "pagerank" -> rows(graph.PageRank.run(e, "s", "d", iterations = 3)),
+        "bfs" -> rows(graph.Bfs.hopDistance(e, "s", "d", seeds, "n",
+          maxHops = 5, undirected = true)),
+        "trustrank" -> rows(graph.TrustRank.run(e, "s", "d", seeds, "n", iterations = 3)),
+        "weighted" -> rows(graph.PageRank.runWeighted(
           edges.map(p => (p._1, p._2, p._1 % 3 + 1)).toDF("s", "d", "w"),
-          "s", "d", "w", iterations = 3)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+          "s", "d", "w", iterations = 3)),
+        "labeled" -> rows(graph.Bfs.hopDistanceLabeled(e, "s", "d", seeds, "n",
+          maxHops = 4, undirected = true)),
+        "coreness" -> rows(graph.KCore.coreness(e, "s", "d", maxK = 0,
+          localFinishEdges = 0L)),
+        "kcore" -> rows(graph.KCore.run(e, "s", "d", k = 3, localFinishEdges = 0L)),
+        "sssp" -> rows(graph.Sssp.run(
+          edges.map(p => (p._1, p._2, p._1 % 3 + 1)).toDF("s", "d", "w"),
+          "s", "d", "w", seeds, "n")),
+        "lpa" -> rows(graph.LabelPropagation.run(e, "s", "d", iterations = 3)),
+        "nf" -> rows(graph.NeighborhoodFunction.run(e, "s", "d", maxHops = 4,
+          undirected = true)),
+        "components" -> rows(dedup.Components.labels(
+          edges.toDF("a_id", "b_id"), driverCap = -1L)))
     }
-    assert(wpB == wpS)
-    val (lbB, lbS) = both {
-      graft.operators.graph.Bfs.hopDistanceLabeled(edges.toDF("s", "d"),
-          "s", "d", seeds, "n", maxHops = 4, undirected = true)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq.sorted
+    val results = regimes.map { case (name, conf) =>
+      val saved = conf.keys.map(k => k -> spark.conf.getOption(k))
+      conf.foreach { case (k, v) => spark.conf.set(k, v) }
+      try name -> runAll()
+      finally saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
     }
-    assert(lbB == lbS)
-    val (cnB, cnS) = both {
-      graft.operators.graph.KCore.coreness(edges.toDF("s", "d"), "s", "d",
-          maxK = 0, localFinishEdges = 0L)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
-    }
-    assert(cnB == cnS)
+    val (_, want) = results.head
+    for ((name, got) <- results.tail; op <- want.keys)
+      assert(got(op) == want(op), s"$op differs under $name")
   }
 
   test("property: label propagation equals naive synchronous LPA with the (cnt, min-label) tie rule") {

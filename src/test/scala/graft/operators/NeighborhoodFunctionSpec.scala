@@ -61,6 +61,31 @@ class NeighborhoodFunctionSpec extends AnyFunSuite {
     assert(got((4L, 2)) == 4L) // 4 reaches everything in 2
   }
 
+  test("a hop that moves estimates by less than rounding does not read as converged") {
+    // HLL-mode balls (lgK=6): w's hop-3 gain of x moves its unrounded
+    // estimate by ~0.45 (the BIGINT nf_est stays flat, as does every other
+    // node's), and v gains x one hop later with a full-unit move. A test on
+    // Σ nf_est stopped at hop 3 and lost hop 4.
+    import spark.implicits._
+    val (v, w, z, y1, y2, x) = (1L, 2L, 3L, 4L, 5L, 485L)
+    val aw = (0L until 192L).map(1000000L + _)
+    val av = (1L to 500L).map(2000000L + _)
+    val e = aw.map((w, _)) ++ aw.map((z, _)) ++ av.map((v, _)) ++
+      Seq((v, w), (w, z), (w, y1), (y1, y2), (y2, x))
+    // HLL-mode estimates depend on how partial unions are grouped, so the
+    // case is pinned at the suite's 4 shuffle partitions
+    val saved = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    val got = try {
+      NeighborhoodFunction.run(e.toDF("s", "d"), "s", "d", maxHops = 6, lgK = 6)
+        .collect().map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2)).toMap
+    } finally spark.conf.set("spark.sql.shuffle.partitions", saved)
+    val nodes = got.keys.map(_._1).toSet
+    assert(got.keys.map(_._2).max == 4, "the loop stops after hop 4, the last move")
+    assert(nodes.forall(n => got((n, 3)) == got((n, 2))), "hop 3 is flat once rounded")
+    assert(got((v, 4)) > got((v, 3)), "hop 4 still moves v's estimate")
+  }
+
   test("centrality: harmonic/closeness integer arithmetic from the nf table") {
     import spark.implicits._
     val e = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L))

@@ -1,11 +1,9 @@
 package graft.sources
 
-import java.util.concurrent.ConcurrentLinkedQueue
-import scala.jdk.CollectionConverters._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
+import graft.TestSpark.jobsOf
 import graft.dsl.{Engine, ScriptContext}
 
 /** A repeated file load reuses the schema Spark inferred while the file set
@@ -17,37 +15,6 @@ class FileSchemaCacheSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private def tmp(prefix: String) =
     java.nio.file.Files.createTempDirectory(prefix).toString + "/d"
-
-  /** Spark jobs started between two marker jobs around `body`, in listener
-    * bus order (one bus queue, so the end marker arriving means every job
-    * of `body` has been seen).
-    */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val tag = java.util.UUID.randomUUID().toString
-    val seen = new ConcurrentLinkedQueue[String]()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.add(Option(e.properties).flatMap(p =>
-          Option(p.getProperty("spark.job.description"))).getOrElse(""))
-    }
-    def marker(name: String): Unit = {
-      sc.setJobDescription(s"$name-$tag")
-      sc.parallelize(Seq(1), 1).count()
-      sc.setJobDescription(null)
-    }
-    sc.addSparkListener(l)
-    try {
-      marker("begin")
-      val out = body
-      marker("end")
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!seen.contains(s"end-$tag") && System.nanoTime() < deadline) Thread.sleep(10)
-      val order = seen.asScala.toSeq
-      assert(order.contains(s"end-$tag"), "end marker never reached the listener")
-      (out, order.indexOf(s"end-$tag") - order.indexOf(s"begin-$tag") - 1)
-    } finally sc.removeSparkListener(l)
-  }
 
   private def load(s: SparkSession, format: String, path: String,
                    opts: Map[String, String] = Map.empty): DataFrame =
