@@ -106,6 +106,11 @@ object Bench {
       .filter(p => p.getName.contains("CodeHeap") || p.getName.contains("Code Cache"))
       .map(_.getUsage.getUsed).sum / 1048576.0
   }
+  /** Janino compilations so far (each miss of Spark's generated-class
+    * cache): a warm run that still compiles was evicted from that cache.
+    */
+  private def codegenCount: Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
   /** Whole-process CPU seconds — a slow wall-clock with a small CPU delta
     * means the run was WAITING (scheduler/cleaner interference), a large
     * one means it was genuinely computing; the key discriminator for
@@ -120,7 +125,7 @@ object Bench {
 
   final case class RunStats(time: Either[String, Double],
                             gcMs: Long, jitMs: Long, ccMb: Double,
-                            cpuS: Double, load1: Double)
+                            cpuS: Double, load1: Double, codegenN: Long)
 
   /** /proc-based box-state sample (VERDICT r19 ask #4): the official record
     * has been sick (rc=124 or 20-70x pathological entries) five rounds
@@ -206,7 +211,7 @@ object Bench {
     val stamp = s""""cpus":${spark.sparkContext.defaultParallelism},"sha":"${gitSha()}""""
 
     def runOnce(name: String): RunStats = {
-      val g0 = gcMillis; val j0 = jitMillis; val c0 = cpuSec
+      val g0 = gcMillis; val j0 = jitMillis; val c0 = cpuSec; val k0 = codegenCount
       val t0 = System.nanoTime()
       val r: Either[String, Double] = try {
         SparkEntry.queries(name)(spark, sfDir)
@@ -219,7 +224,7 @@ object Bench {
       } finally spark.catalog.clearCache() // not timed; see scaladoc
       RunStats(r, gcMillis - g0, jitMillis - j0, codeCacheUsedMb, cpuSec - c0,
         readProc("/proc/loadavg").split(" ").headOption
-          .flatMap(_.toDoubleOption).getOrElse(-1.0))
+          .flatMap(_.toDoubleOption).getOrElse(-1.0), codegenCount - k0)
     }
 
     // ------------------------------------------------------------------
@@ -562,9 +567,9 @@ object Bench {
     stalls.foreach { n =>
       val (c, w) = byName(n)
       System.err.println(String.format(java.util.Locale.ROOT,
-        "[bench] STALL retained: %s cold=%.2fs warm=%.2fs gc=%dms jit=%dms cpu=%.1fs",
+        "[bench] STALL retained: %s cold=%.2fs warm=%.2fs gc=%dms jit=%dms codegen=%d cpu=%.1fs",
         n, Double.box(c.getOrElse(-1.0)), Double.box(w.time.getOrElse(-1.0)),
-        Long.box(w.gcMs), Long.box(w.jitMs), Double.box(w.cpuS)))
+        Long.box(w.gcMs), Long.box(w.jitMs), Long.box(w.codegenN), Double.box(w.cpuS)))
     }
 
     // swept-regime baseline: the prior round's SWEPT warm only — prior
@@ -648,9 +653,10 @@ object Bench {
       warmStats.map { case (n, w) => s""""$n":${f(w)}""" }.mkString("{", ",", "}")
     // file copy: full query names, full precision (Double.toString is
     // locale-independent), plus the cold sweep and the per-query JVM-health
-    // deltas (GC/JIT ms inside each warm run, code-cache occupancy after
-    // it). A cold value of -1 with the query present in "queries" means the
-    // budget degraded that query to single-run mode.
+    // deltas (GC/JIT ms and Janino compilations inside each warm run,
+    // code-cache occupancy after it). A cold value of -1 with the query
+    // present in "queries" means the budget degraded that query to
+    // single-run mode.
     def fileRecord(regs: Seq[String], isolated: Seq[(String, Double)],
                    phase: String): String = {
       val regsFull = regs.map("\"" + _ + "\"").mkString("[", ",", "]")
@@ -660,7 +666,7 @@ object Bench {
       // attribution data VERDICT r19 ask #4 calls for
       val envNow = envSample()
       val envFull = s"""{"load1_start":${num(envStart.load1)},"load1_now":${num(envNow.load1)},"mhz_start":${envStart.mhz.round},"mhz_now":${envNow.mhz.round},"other_cores":${num(otherCores(envStart, envNow))}}"""
-      s"""{"metric":"total","value":$total,"unit":"sec",$stamp,"single_n":${singles.size},"queries":${fmt(results, _.toString)},"cold":${fmt(cold, _.toString)},"failed":$failedJson,"stalls":$stallsFullJson,"regressions":$regsFull,"wobbles":$wobblesFullJson,"skipped":$skippedFullJson,"isolated":$isoFull,"gc_ms":${statsMap(_.gcMs.toString)},"jit_ms":${statsMap(_.jitMs.toString)},"codecache_mb":${statsMap(w => num(w.ccMb))},"cpu_s":${statsMap(w => num(w.cpuS))},"load1":${statsMap(w => num(w.load1))},"env":$envFull,"sf":"$sfDir","drift":${num(globalRatio)},"drift_controls":${gate.controlCount},"drift_alarm":${gate.driftAlarm},"cdrift":${gate.canaryRatio.map(num).getOrElse("null")},"cdrift_canaries":${gate.canaryCount},"phase":"$phase"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec",$stamp,"single_n":${singles.size},"queries":${fmt(results, _.toString)},"cold":${fmt(cold, _.toString)},"failed":$failedJson,"stalls":$stallsFullJson,"regressions":$regsFull,"wobbles":$wobblesFullJson,"skipped":$skippedFullJson,"isolated":$isoFull,"gc_ms":${statsMap(_.gcMs.toString)},"jit_ms":${statsMap(_.jitMs.toString)},"codecache_mb":${statsMap(w => num(w.ccMb))},"codegen":${statsMap(_.codegenN.toString)},"cpu_s":${statsMap(w => num(w.cpuS))},"load1":${statsMap(w => num(w.load1))},"env":$envFull,"sf":"$sfDir","drift":${num(globalRatio)},"drift_controls":${gate.controlCount},"drift_alarm":${gate.driftAlarm},"cdrift":${gate.canaryRatio.map(num).getOrElse("null")},"cdrift_canaries":${gate.canaryCount},"phase":"$phase"}"""
     }
     def stdoutRecord(regs: Seq[String], isolated: Seq[(String, Double)],
                      phase: String): String =

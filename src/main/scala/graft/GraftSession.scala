@@ -10,6 +10,21 @@ import org.apache.spark.sql.SparkSession
   * Scale note: `spark.sql.shuffle.partitions` is set to the local core
   * count for the test harness; on a real cluster leave it unset and rely on
   * AQE coalescing (enabled by default on Spark 4).
+  *
+  * Codegen cache: `spark.sql.codegen.cache.maxEntries` (a static conf, read
+  * once per JVM when `CodeGenerator` is first used) is raised from Spark's
+  * default 100 to [[CodegenCacheEntries]]. The engine is a long-lived
+  * server whose tenants' scripts all share one JVM's LRU of
+  * Janino-compiled classes. One pass of perfbench's 13-script
+  * `interactive` mix generates about 200 distinct classes, so a 100-entry
+  * LRU evicts every class before its script comes round again and each
+  * pass recompiled all of them (205 compilations, ~2 s of Janino, per
+  * pass in steady state on one tenant; 0 with the larger cache). The cost
+  * is per query, independent of data size, and every executor JVM pays it
+  * too. The cache is a Guava cache split into 4 segments that evict
+  * separately, so a class can be evicted before the total reaches the
+  * limit. 1024 is ~5x the mix's working set (256 per segment against
+  * ~50), leaving room for the query catalog's scripts.
   */
 object GraftSession {
 
@@ -20,10 +35,14 @@ object GraftSession {
   def defaultCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
     math.min(32, Runtime.getRuntime.availableProcessors()).toString)
 
+  /** Generated classes one JVM keeps compiled (see the object doc). */
+  val CodegenCacheEntries = 1024
+
   def builder(cpus: String = defaultCpus): SparkSession.Builder =
     SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")

@@ -423,7 +423,11 @@ object ReduceFeaturesInPlaceET extends NoPathET {
 
 /** `!resource` — report the engine's compute resources (reference:
   * EngineResource/`!resource` dynamically resizes executors via the
-  * cluster manager; local mode can only REPORT, and says so).
+  * cluster manager; local mode can only REPORT, and says so). The codegen
+  * columns are driver-process totals: Janino compilations and their
+  * summed ms since the JVM started, and the size of the generated-class
+  * LRU (see [[graft.GraftSession]]); a script that reruns a query and
+  * sees `codegen_compilations` move has had its classes evicted.
   */
 object EngineResourceET extends NoPathET {
   override def name = "EngineResource"
@@ -437,7 +441,13 @@ object EngineResourceET extends NoPathET {
       "master" -> sc.master,
       "default_parallelism" -> sc.defaultParallelism.toString,
       "executors" -> sc.statusTracker.getExecutorInfos.length.toString,
-      "app_id" -> sc.applicationId)
+      "app_id" -> sc.applicationId,
+      "codegen_compilations" ->
+        org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount.toString,
+      "codegen_compile_ms" ->
+        (org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime / 1000000L).toString,
+      "codegen_cache_max_entries" ->
+        ctx.spark.conf.get(org.apache.spark.sql.internal.StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key))
   }
 }
 

@@ -104,10 +104,12 @@ object NeighborhoodFunction {
       // bit-identical either way. The in-degree is probed with a plain
       // count BEFORE any list is built: the cap must stop the celebrity
       // list from ever being materialized, not discard it afterwards.
+      // With maxHops <= 1 the adjacency would route sketches at most once,
+      // so its probe and checkpoint jobs would cost more than they save.
       val degCap = spark.conf.getOption(AdjacencyMaxDegreeKey)
         .flatMap(_.toLongOption).getOrElse(4000000L)
       val adjacency: Option[DataFrame] =
-        if (degCap <= 0) None
+        if (degCap <= 0 || maxHops <= 1) None
         else {
           val degRow = e.groupBy(col("v")).count().agg(max(col("count"))).head()
           val maxDeg = if (degRow.isNullAt(0)) 0L else degRow.getLong(0)

@@ -90,6 +90,31 @@ class CompatETSpec extends AnyFunSuite {
     assert(e.getMessage.contains("local-mode"))
   }
 
+  test("!resource codegen counters: a new query compiles, its rerun does not") {
+    def counters(): (Long, Long, Int) = {
+      val r = runDF("!resource;").head()
+      (r.getAs[String]("codegen_compilations").toLong,
+        r.getAs[String]("codegen_compile_ms").toLong,
+        r.getAs[String]("codegen_cache_max_entries").toInt)
+    }
+    val query = s"select id * 3 + ${System.nanoTime()} as v from range(2) as t;"
+    val (n0, ms0, max) = counters()
+    assert(max == graft.GraftSession.CodegenCacheEntries)
+    runDF(query).collect()
+    val (n1, ms1, _) = counters()
+    assert(n1 > n0 && ms1 >= ms0)
+    // process-wide counters: a streaming query left running by an earlier
+    // suite can compile meanwhile, so a rerun that moved them is retried
+    def rerunCompiles(): Long = {
+      val (a, _, _) = counters()
+      runDF(query).collect()
+      counters()._1 - a
+    }
+    val reruns = scala.collection.mutable.ArrayBuffer(rerunCompiles())
+    while (reruns.last != 0L && reruns.size < 3) reruns += rerunCompiles()
+    assert(reruns.last == 0L, s"reruns compiled ${reruns.mkString(", ")} classes")
+  }
+
   test("TreeBuildExt: roots, heights, transitive descendants (reference fixture)") {
     val script =
       """set treedata = '''{"id":0,"parentId":null}

@@ -6,13 +6,14 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 import graft.TestSpark.jobsOf
-import graft.operators.graph.{KCore, TrustRank}
+import graft.operators.graph.{KCore, NeighborhoodFunction, TrustRank}
 
 /** Job-count and leak guard for the loop operators' observed round
   * statistics: each round's counts, convergence test and dangling mass
   * come from the job that checkpoints the round, so the two graph ETs of
   * the interactive benchmark run a fixed, low number of Spark jobs, and
-  * observing leaves no persisted RDD behind.
+  * observing leaves no persisted RDD behind. NeighborhoodFunction builds
+  * its adjacency only when a second hop can reuse it.
   */
 class LoopJobsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -57,6 +58,28 @@ class LoopJobsSpec extends AnyFunSuite {
     // the layer nodes (3 links each) peel; the clique keeps degree 7
     assert(kc.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted ==
       (1000L until 1008L).map(_ -> 7L))
+  }
+
+  test("NeighborhoodFunction at 0 and 1 hops runs no in-degree probe or adjacency checkpoint") {
+    val g = graph
+    /** (rows, jobs) of one run; `adjCap` "0" forces the per-edge join. */
+    def runWith(hops: Int, adjCap: Option[String]): (Seq[(Long, Int, Long)], Int) = {
+      adjCap.foreach(spark.conf.set(NeighborhoodFunction.AdjacencyMaxDegreeKey, _))
+      try jobsOf(NeighborhoodFunction.run(g, "a", "b", maxHops = hops)
+          .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq.sorted)
+      finally spark.conf.unset(NeighborhoodFunction.AdjacencyMaxDegreeKey)
+    }
+    for (hops <- Seq(0, 1)) {
+      val (rows, jobs) = runWith(hops, None)
+      val (perEdgeRows, perEdgeJobs) = runWith(hops, Some("0"))
+      assert(jobs == perEdgeJobs, s"maxHops=$hops: $jobs jobs vs $perEdgeJobs per-edge")
+      assert(rows == perEdgeRows)
+    }
+    // from two hops on the adjacency is still probed and built
+    val (rows2, jobs2) = runWith(2, None)
+    val (perEdgeRows2, perEdgeJobs2) = runWith(2, Some("0"))
+    assert(jobs2 > perEdgeJobs2, s"maxHops=2: $jobs2 jobs vs $perEdgeJobs2 per-edge")
+    assert(rows2 == perEdgeRows2)
   }
 
   test("five runs per ET in one session leave only the returned frames persisted") {
