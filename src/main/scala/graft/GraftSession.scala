@@ -25,6 +25,31 @@ import org.apache.spark.sql.SparkSession
   * separately, so a class can be evicted before the total reaches the
   * limit. 1024 is ~5x the mix's working set (256 per segment against
   * ~50), leaving room for the query catalog's scripts.
+  *
+  * Local filesystem: the `file` scheme is bound, through Hadoop's own keys
+  * `fs.file.impl` and `fs.AbstractFileSystem.file.impl` (as
+  * `spark.hadoop.*`), to [[graft.sources.ForkFreeLocalFs]]: the stock
+  * checksummed `LocalFileSystem`/`ChecksumFs` over a `RawLocalFileSystem`
+  * that sets and reads permissions through `java.nio.file` instead of
+  * starting a process. Without the native `libhadoop` (Spark's
+  * distribution ships none) the stock class forks a `chmod` per created
+  * file or directory, a `readlink` per `FileContext.rename` and an
+  * `ls -ld` per listed file whose permission is read; Spark's state store,
+  * its offset, commit and file-source logs, the commit protocol and the
+  * vparquet manifest commit all pay it. A JFR recording of perfbench
+  * `stream_ingest` (seed 4207, 4-vCPU VM) counted about 200 such process
+  * starts per micro-batch (3-3.5 ms each), 0 with the binding. Paths,
+  * `.crc` files, plans and results are unchanged. HDFS, S3 and every other
+  * scheme are untouched.
+  *
+  * Ordering rule: Hadoop caches one `file:` `FileSystem` per JVM (and
+  * user), keyed without the configuration, so an instance created before
+  * this builder's session, from a configuration without the keys, stays
+  * the stock one for the JVM's life. Build the session before touching
+  * Hadoop's local filesystem. `FileContext` makes a new filesystem per
+  * context and always follows the configuration. `!resource`'s `local_fs`
+  * column shows what is bound, and [[getOrCreate]] warns when the cached
+  * instance is not the fork-free one.
   */
 object GraftSession {
 
@@ -39,7 +64,9 @@ object GraftSession {
   val CodegenCacheEntries = 1024
 
   def builder(cpus: String = defaultCpus): SparkSession.Builder =
-    SparkSession.builder()
+    graft.sources.ForkFreeLocalFs.Bindings.foldLeft(SparkSession.builder()) {
+      case (b, (k, v)) => b.config(s"spark.hadoop.$k", v)
+    }
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
@@ -63,6 +90,11 @@ object GraftSession {
   def getOrCreate(cpus: String = defaultCpus): SparkSession = {
     val spark = builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val bound = graft.sources.ForkFreeLocalFs.boundClasses(spark.sparkContext.hadoopConfiguration)
+    if (bound != graft.sources.ForkFreeLocalFs.Bound)
+      org.apache.logging.log4j.LogManager.getLogger(getClass).warn(
+        s"the file: scheme is not bound to the fork-free local filesystem ($bound): " +
+          "a local FileSystem was cached before the session was built")
     // UDFPack deliberately replaces builtin `uuid` (reference semantics:
     // hex without dashes) — the one-time "replaced a previously registered
     // function" WARN is expected noise; keep bench/verify logs signal-only.

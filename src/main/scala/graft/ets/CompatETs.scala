@@ -428,6 +428,9 @@ object ReduceFeaturesInPlaceET extends NoPathET {
   * summed ms since the JVM started, and the size of the generated-class
   * LRU (see [[graft.GraftSession]]); a script that reruns a query and
   * sees `codegen_compilations` move has had its classes evicted.
+  * `local_fs` names the raw class behind `FileSystem.get(file:///)` and
+  * the class of `FileContext`'s local filesystem, the fork-free ones when
+  * the `file:` binding took (see [[graft.GraftSession]]).
   */
 object EngineResourceET extends NoPathET {
   override def name = "EngineResource"
@@ -447,7 +450,11 @@ object EngineResourceET extends NoPathET {
       "codegen_compile_ms" ->
         (org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime / 1000000L).toString,
       "codegen_cache_max_entries" ->
-        ctx.spark.conf.get(org.apache.spark.sql.internal.StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key))
+        ctx.spark.conf.get(org.apache.spark.sql.internal.StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key),
+      "local_fs" -> {
+        val (fs, fc) = graft.sources.ForkFreeLocalFs.boundClasses(sc.hadoopConfiguration)
+        s"FileSystem:$fs FileContext:$fc"
+      })
   }
 }
 

@@ -117,6 +117,20 @@ object VParquet {
   def latestVersion(spark: SparkSession, table: String): Option[Long] =
     versions(fs(spark, table), table).lastOption
 
+  /** One `_vlog` listing and the manifest at its head, read once per
+    * commit and handed to everything that asks about the head (bucket
+    * default, re-delivery check, rebase); on an object store each listing
+    * is a LIST and each manifest read a GET.
+    */
+  private final case class Head(versions: Seq[Long], manifest: Option[Manifest]) {
+    def latest: Option[Long] = versions.lastOption
+  }
+
+  private def readHead(spark: SparkSession, table: String): Head = {
+    val vs = versions(fs(spark, table), table)
+    Head(vs, vs.lastOption.map(readManifest(spark, table, _)))
+  }
+
   def readManifest(spark: SparkSession, table: String, v: Long): Manifest = {
     val in = fs(spark, table).open(manifestPath(table, v))
     val m = try mapper.readValue(in: java.io.InputStream, classOf[Manifest])
@@ -162,14 +176,14 @@ object VParquet {
     * fall through to older versions (driver-side JSON reads, no Spark
     * jobs, and upgraded away by the next commit).
     */
-  private def alreadyCommittedAnyVersion(spark: SparkSession, table: String,
+  private def alreadyCommittedAnyVersion(spark: SparkSession, table: String, head: Head,
                                          txn: Option[Long],
                                          txnAppId: Option[String]): Boolean =
     txn match {
       case Some(t) =>
         val key = seenKey(txnAppId)
-        versions(fs(spark, table), table).reverseIterator
-          .map(v => readManifest(spark, table, v))
+        val older = head.versions.reverseIterator.drop(1).map(v => readManifest(spark, table, v))
+        (head.manifest.iterator ++ older)
           .map { m =>
             if (m.txnAppId == txnAppId && m.txn.isDefined)
               Some(m.txn.exists(_ >= t))
@@ -241,9 +255,9 @@ object VParquet {
           attempts += 1
           val conflict = rebase.getOrElse(throw e)
           if (attempts > 8) throw e
-          val latest = latestVersion(spark, table).getOrElse(throw e)
-          val lm = readManifest(spark, table, latest)
-          if (alreadyCommittedAnyVersion(spark, table, txn, txnAppId)) return latest
+          val h = readHead(spark, table)
+          val lm = h.manifest.getOrElse(throw e)
+          if (alreadyCommittedAnyVersion(spark, table, h, txn, txnAppId)) return h.latest.get
           conflict(lm).foreach(why => throw new ConcurrentWriteException(why, e))
           base = Some(lm)
       }
@@ -464,10 +478,10 @@ object VParquet {
             mergeSchema: Boolean = false): Long = {
     requireNoReservedCols(df)
     val spark = df.sparkSession
-    val prev = latestVersion(spark, table)
-    val prevManifest = prev.map(readManifest(spark, table, _))
-    if (alreadyCommittedAnyVersion(spark, table, txn, txnAppId))
-      return prev.get // this micro-batch already committed — skip duplicate
+    val head = readHead(spark, table)
+    val prevManifest = head.manifest
+    if (alreadyCommittedAnyVersion(spark, table, head, txn, txnAppId))
+      return head.latest.get // this micro-batch already committed — skip duplicate
     // range-cluster before writing so per-file min/max on clusterBy cols
     // are disjoint and the manifest skipping actually prunes
     val laid =
@@ -496,17 +510,24 @@ object VParquet {
     * snapshot (from plain appends / a layout change) are always read and
     * re-bucketed, so a bucketed merge also converges the table to the
     * bucketed layout.
+    *
+    * `adoptBuckets` (the keyed sink's default) makes a missing
+    * `numBuckets` the head's recorded bucket count, or 64 when the head
+    * records none ([[resolveBuckets]]).
     */
   def merge(batch: DataFrame, table: String, idCols: Seq[String],
             numBuckets: Option[Int], orderCol: Option[String],
-            txn: Option[Long] = None, txnAppId: Option[String] = None): Long = {
+            txn: Option[Long] = None, txnAppId: Option[String] = None,
+            adoptBuckets: Boolean = false): Long = {
     requireNoReservedCols(batch)
     val spark = batch.sparkSession
-    val prev = latestVersion(spark, table)
-    val current = prev.map(v => readManifest(spark, table, v))
-    if (alreadyCommittedAnyVersion(spark, table, txn, txnAppId))
+    val head = readHead(spark, table)
+    val prev = head.latest
+    val current = head.manifest
+    if (alreadyCommittedAnyVersion(spark, table, head, txn, txnAppId))
       return prev.get // re-delivered micro-batch — already committed
-    current.filter(_.numBuckets > 0).zip(numBuckets).foreach { case (m, n) =>
+    val buckets = if (adoptBuckets) Some(resolveBuckets(current, numBuckets)) else numBuckets
+    current.filter(_.numBuckets > 0).zip(buckets).foreach { case (m, n) =>
       require(m.numBuckets == n,
         s"vparquet: $table is bucketed with numBuckets=${m.numBuckets}; " +
           s"cannot merge with numBuckets=$n (rows would be located in the wrong bucket)")
@@ -520,7 +541,7 @@ object VParquet {
     val oldFiles = current.map(_.files).getOrElse(Seq.empty)
     def mergeManifest(nb: Int, files: Seq[FileEntry]) = Manifest(0L, "merge",
       System.currentTimeMillis(), nb, files, idCols, txn, txnAppId, schemaJsonOf(deduped))
-    numBuckets match {
+    buckets match {
       case Some(n) =>
         val bucketOf = pmod(xxhash64(idCols.map(col): _*), lit(n)).cast("int")
         val batchB = deduped.withColumn("__bucket__", bucketOf).persist()
@@ -580,14 +601,11 @@ object VParquet {
 
   /** The bucket count a keyed sink merges with: an explicit numBuckets
     * wins (a mismatch with the table's recorded layout is a loud error in
-    * the merge); otherwise adopt the table's recorded count, or 64 on a
+    * the merge); otherwise adopt the head's recorded count, or 64 on a
     * fresh table.
     */
-  private[graft] def resolveBuckets(spark: SparkSession, table: String,
-                                    numBuckets: Option[Int]): Int =
-    numBuckets.orElse(latestVersion(spark, table)
-      .map(v => readManifest(spark, table, v).numBuckets)
-      .filter(_ > 0)).getOrElse(64)
+  private def resolveBuckets(head: Option[Manifest], numBuckets: Option[Int]): Int =
+    numBuckets.orElse(head.map(_.numBuckets).filter(_ > 0)).getOrElse(64)
 
   /** Rewrite the latest snapshot into ~`targetFileSizeMB`-sized files as a
     * new version (the CDC small-file cure: every merge adds files to the

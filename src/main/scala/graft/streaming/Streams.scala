@@ -195,9 +195,6 @@ object StreamSinks {
         val target = ctx.resolvePath(path)
         val orderCol = opts.get("orderCol")
         val numBuckets = opts.get("numBuckets").map(_.toInt)
-        val bucketsOf: org.apache.spark.sql.SparkSession => Option[Int] =
-          if (upsert) spark => Some(VParquet.resolveBuckets(spark, target, numBuckets))
-          else _ => numBuckets
         val compactEvery = opts.get("autoCompactEvery").map(_.toLong)
         require(compactEvery.forall(_ >= 1), "autoCompactEvery must be >= 1")
         // batch ids restart at 0 per query, so the checkpoint is part of
@@ -209,8 +206,8 @@ object StreamSinks {
             case (Some(tc), Some(ks)) => UpsertParquet.routeMerge(batch.toDF(), target, tc, ks,
               numBuckets, orderCol, batchId, appId)
             case (None, Some(ks)) =>
-              VParquet.merge(batch.toDF(), target, ks, bucketsOf(spark), orderCol,
-                txn = Some(batchId), txnAppId = Some(appId))
+              VParquet.merge(batch.toDF(), target, ks, numBuckets, orderCol,
+                txn = Some(batchId), txnAppId = Some(appId), adoptBuckets = upsert)
               Seq(target)
             case _ =>
               VParquet.write(batch.toDF(), target, overwrite = false,
@@ -239,11 +236,12 @@ object UpsertParquet {
     * `tableCol` value picks a vparquet table under `base`; every routed
     * target gets ONE transactional merge per micro-batch, idempotent per
     * (target, txnAppId, batchId), with numBuckets resolved per target
-    * ([[VParquet.resolveBuckets]]). A crash between two targets' commits
-    * re-delivers the whole batch: the already-committed target sees its
-    * txn marker and no-ops while the lagging one catches up — so the
-    * sink stays exactly-once PER TABLE even though targets commit
-    * sequentially. Route values become directory names and are
+    * from its own head (`adoptBuckets` of [[VParquet.merge]]). A crash
+    * between two targets' commits re-delivers the whole batch: the
+    * already-committed target sees its txn marker and no-ops while the
+    * lagging one catches up — so the sink stays exactly-once PER TABLE
+    * even though targets commit sequentially. Route values become
+    * directory names and are
     * validated against a conservative charset (no separators, no `..`).
     * Returns the routed tables' paths.
     */
@@ -252,7 +250,6 @@ object UpsertParquet {
                  numBuckets: Option[Int], orderCol: Option[String],
                  batchId: Long, appId: String): Seq[String] = {
     import org.apache.spark.sql.functions._
-    val spark = batch.sparkSession
     require(batch.columns.contains(tableCol),
       s"tableCol '$tableCol' not in stream schema ${batch.columns.mkString(",")}")
     // reused once per routed target — cache the micro-batch, not the source
@@ -268,9 +265,8 @@ object UpsertParquet {
       names.toSeq.map { name =>
         val sub = cached.filter(col(tableCol).cast("string") === name).drop(tableCol)
         val tgt = base.stripSuffix("/") + "/" + name
-        VParquet.merge(sub, tgt, idCols,
-          Some(VParquet.resolveBuckets(spark, tgt, numBuckets)), orderCol,
-          txn = Some(batchId), txnAppId = Some(appId))
+        VParquet.merge(sub, tgt, idCols, numBuckets, orderCol,
+          txn = Some(batchId), txnAppId = Some(appId), adoptBuckets = true)
         tgt
       }
     } finally cached.unpersist(false)
